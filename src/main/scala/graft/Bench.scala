@@ -120,16 +120,12 @@ object Bench {
     // rounds (round 7 recorded 13-15x apparent regressions on two
     // unchanged queries this way). Sorting pins who pays the first-touch
     // cost so per-query deltas across rounds compare like with like.
-    // optional arg/env filter (Verify's prefix semantics) — dev-only fast
+    // optional arg/env filter (SparkEntry.queryFilter) — dev-only fast
     // path to re-time a handful of queries; the driver passes nothing
     val filterSpec = args.headOption.orElse(sys.env.get("SPARK_GRAFT_ONLY"))
       .filter(_.nonEmpty)
-    val only: String => Boolean = filterSpec match {
-      case Some(spec) =>
-        val pats = spec.split(',').toSeq
-        name => pats.exists(p => name == p || name.startsWith(p + "_"))
-      case None => _ => true
-    }
+    val only: String => Boolean =
+      filterSpec.map(SparkEntry.queryFilter).getOrElse(_ => true)
     val sampledResults = SparkEntry.queries.toSeq.filter(kv => only(kv._1))
       .sortBy(_._1).map { case (name, fn) =>
         val r = sampled(name, fn)

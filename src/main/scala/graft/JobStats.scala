@@ -14,17 +14,17 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.JobStats <sfDir> [q49,q155,... | all]"
   *
-  * Names use Verify's prefix semantics. Two samples per query (cache
-  * cleared between queries, never between samples — Bench's convention);
-  * counts and seconds are reported for BOTH samples, because a first-touch
-  * job (codegen, persist build) that disappears in the warm sample is
-  * itself a finding. Output: one JSON line per query plus a sorted summary
-  * of (jobs+stages)/sec offenders.
+  * Names match by [[SparkEntry.queryFilter]] (`all` selects every query).
+  * Two samples per query (cache cleared between queries, never between
+  * samples — Bench's convention); counts and seconds are reported for
+  * BOTH samples, because a first-touch job (codegen, persist build) that
+  * disappears in the warm sample is itself a finding. Output: one JSON line
+  * per query plus a sorted summary of (jobs+stages)/sec offenders.
   */
 object JobStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val pats = args.drop(1).headOption.getOrElse("all").split(',').toSeq
+    val spec = args.drop(1).headOption.getOrElse("all")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -82,8 +82,9 @@ object JobStats {
       }
     }
 
-    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n =>
-      pats.contains("all") || pats.exists(p => n == p || n.startsWith(p + "_") || n.startsWith(p)))
+    val only: String => Boolean =
+      if (spec.split(',').contains("all")) _ => true else SparkEntry.queryFilter(spec)
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(only)
     val rows = names.flatMap { name =>
       val fn = SparkEntry.queries(name)
       val s1 = once(fn)

@@ -7,7 +7,7 @@ package graft
   *
   *   sbt "runMain graft.PlanDump <sfDir> <outDir> q155,q160,..."
   *
-  * Names use Verify's prefix semantics (`q155` matches `q155_host_pagerank`).
+  * Names match by [[SparkEntry.queryFilter]] (`q155` matches `q155_host_pagerank`).
   * Writes `<outDir>/<name>.txt`. Plans are built but never executed (no
   * actions beyond what query CONSTRUCTION itself runs — iterative operators
   * like PageRank materialize per-iteration frames at build time; their dump
@@ -17,7 +17,6 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val pats = args(2).split(',').toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
@@ -30,7 +29,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => pats.exists(p => n == p || n.startsWith(p + "_") || n.startsWith(p)))
+      .filter(SparkEntry.queryFilter(args(2)))
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)

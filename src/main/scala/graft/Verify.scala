@@ -42,15 +42,11 @@ object ContractLint {
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — dev-only fast path
-    // to re-verify a handful of queries (driver passes 2 args). A pattern
-    // matches the exact name or a "qNN" prefix up to the underscore
-    // ("q9" runs only q9_*, never q90-q99) — substring matching silently
-    // over-selected and could mislead a subset re-verify.
+    // to re-verify a handful of queries (driver passes 2 args), matched by
+    // SparkEntry.queryFilter
     val (sfDir, outDir) = (args(0), args(1))
     val only: String => Boolean =
-      if (args.length > 2) { val pats = args(2).split(',').toSeq
-        name => pats.exists(p => name == p || name.startsWith(p + "_"))
-      } else _ => true
+      if (args.length > 2) SparkEntry.queryFilter(args(2)) else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

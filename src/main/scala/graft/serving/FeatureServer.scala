@@ -3,6 +3,8 @@ package graft.serving
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -17,7 +19,10 @@ import graft.sources.KVClient
   * `{"user_id", "as_of", "features": {...}, "source": "online"}` with the
   * KV payload parsed into the features map, or 404
   * `{"detail": "Features not found for user_id: ..."}` when the key is
-  * absent — the same contract the reference serves.
+  * absent — the same contract the reference serves. A lookup that fails
+  * (the KV client throws, or the stored payload is not JSON) answers 500
+  * `{"detail": ...}`, as the reference's FastAPI does for an unhandled
+  * error, instead of closing the connection with no response.
   *
   * This is a serving-path sidecar, not a Spark component: one KV GET and
   * one JSON encode per request. Start it next to any [[KVClient]]
@@ -28,7 +33,20 @@ class FeatureServer private (server: HttpServer) {
   def stop(): Unit = server.stop(0)
 }
 
+/** TCP_NODELAY: the JDK HttpServer writes a response's head and body as two
+  * segments. With Nagle's algorithm on, the body waits for the client to
+  * acknowledge the head, and a client that delays its ACKs (~40 ms on
+  * Linux) stalls every response on a busy keep-alive connection — about
+  * 25 requests/s per connection. This object therefore sets
+  * `sun.net.httpserver.nodelay=true` before it creates a server, unless the
+  * property is already set. The JDK reads the property once per JVM, when
+  * it builds its first HttpServer, so a JDK HttpServer created elsewhere
+  * before the first [[FeatureServer.start]] fixes the setting for this one.
+  */
 object FeatureServer {
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
+  if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
 
   private val mapper = new ObjectMapper()
   private val Prefix = "/features/online/"
@@ -50,7 +68,7 @@ object FeatureServer {
         else if (!path.startsWith(Prefix) || path.length <= Prefix.length) 404 -> detail("not found")
         else {
           val userId = path.substring(Prefix.length)
-          client.get(keyPrefix + userId) match {
+          try client.get(keyPrefix + userId) match {
             case None =>
               404 -> detail(s"Features not found for user_id: $userId")
             case Some(json) =>
@@ -60,6 +78,9 @@ object FeatureServer {
               root.set[com.fasterxml.jackson.databind.JsonNode]("features", mapper.readTree(json))
               root.put("source", "online")
               200 -> mapper.writeValueAsString(root)
+          } catch {
+            case NonFatal(e) =>
+              500 -> detail(s"Internal Server Error: lookup of user_id $userId failed: $e")
           }
         }
       val bytes = body.getBytes(StandardCharsets.UTF_8)

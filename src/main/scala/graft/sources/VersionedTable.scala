@@ -277,6 +277,13 @@ object VersionedTable {
     * does, and deleting it would break that commit — the standard
     * retention caveat of any log-structured table format. Run vacuum with a
     * grace comfortably above the longest write, or with writers quiesced.
+    *
+    * `graceMs` is also a retention floor by version age, the same check as
+    * Delta's retention duration: a version whose successor was committed
+    * (by the successor manifest's modification time) less than `graceMs`
+    * ago is retained beyond `keepLast`, manifest and data dirs both, so a
+    * reader pinned to a just-replaced snapshot keeps its files however old
+    * they are.
     */
   def vacuum(spark: SparkSession, rootStr: String, keepLast: Int,
       graceMs: Long = 3600000L): Unit = {
@@ -284,16 +291,19 @@ object VersionedTable {
     val (fs, root) = fsRoot(spark, rootStr)
     val vs = versions(fs, root)
     if (vs.isEmpty) return
-    val (dropped, kept) = vs.splitAt(math.max(0, vs.size - keepLast))
-    val live = kept.flatMap(readManifest(fs, root, _).entries.values).toSet
     val cutoff = System.currentTimeMillis() - graceMs
+    def replacedBeforeCutoff(i: Int) =
+      fs.getFileStatus(manifestPath(root, vs(i + 1))).getModificationTime <= cutoff
+    val (dropped, kept) = vs.indices
+      .partition(i => i < vs.size - keepLast && replacedBeforeCutoff(i))
+    val live = kept.map(vs).flatMap(readManifest(fs, root, _).entries.values).toSet
     fs.listStatus(root).foreach { st =>
       val name = st.getPath.getName
       if (st.isDirectory && name.startsWith(DataDirPrefix) && !live.contains(name)
           && st.getModificationTime < cutoff)
         fs.delete(st.getPath, true)
     }
-    dropped.foreach(v => fs.delete(manifestPath(root, v), false))
+    dropped.foreach(i => fs.delete(manifestPath(root, vs(i)), false))
     // stale staging files from crashed publishers
     Option(fs.globStatus(new Path(logDir(root), ".tmp-*")))
       .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])

@@ -24,4 +24,17 @@ class EntrySpec extends SparkTestBase {
     // and no orphaned oracle entries for queries that don't exist
     (SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet) shouldBe empty
   }
+
+  test("tools' query filter: a prefix selects up to the underscore, an exact name itself") {
+    val names = SparkEntry.queries.keys.toSeq
+    // q90-q99 and q150-q159 exist: a bare startsWith would select them
+    names.count(_.startsWith("q9")) should be > 1
+    names.count(_.startsWith("q15")) should be > 1
+    names.filter(SparkEntry.queryFilter("q9")).forall(_.startsWith("q9_")) shouldBe true
+    SparkEntry.queryFilter("q9")("q90_source_drift") shouldBe false
+    names.filter(SparkEntry.queryFilter("q15")) shouldBe Seq("q15_pit_join")
+    names.filter(SparkEntry.queryFilter("q155_host_pagerank")) shouldBe Seq("q155_host_pagerank")
+    names.filter(SparkEntry.queryFilter("q15,q09")).toSet shouldBe
+      Set("q15_pit_join", "q09_conditional_agg")
+  }
 }

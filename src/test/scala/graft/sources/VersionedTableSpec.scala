@@ -238,6 +238,22 @@ class VersionedTableSpec extends SparkTestBase {
     VersionedTable.read(spark, root).as[Long].collect().toSet shouldBe Set(999L)
   }
 
+  test("vacuum retains a just-replaced version for its pinned reader, however old its files") {
+    val root = tmpRoot("vacfloor")
+    VersionedTable.commitOverwrite((1L to 30L).toDF("id"), root)
+    val f = fs(root)
+    // v1's data dir was written long ago; only its replacement is recent
+    val twoHoursAgo = System.currentTimeMillis() - 2L * 3600000L
+    f.listStatus(new Path(root)).filter(_.getPath.getName.startsWith("data-"))
+      .foreach(st => f.setTimes(st.getPath, twoHoursAgo, -1L))
+    VersionedTable.commitOverwrite(Seq(999L).toDF("id"), root) // v2
+    val pinned = VersionedTable.read(spark, root, Some(1L))
+    VersionedTable.vacuum(spark, root, keepLast = 1)
+    pinned.count() shouldBe 30L
+    VersionedTable.versions(f, new Path(root)) shouldBe Seq(1L, 2L)
+    VersionedTable.read(spark, root).as[Long].collect().toSet shouldBe Set(999L)
+  }
+
   test("vacuum drops unreferenced data dirs and manifests, keeps the live snapshot") {
     val root = tmpRoot("vac")
     VersionedTable.commitOverwrite(Seq((1L, "a")).toDF("id", "s"), root)
