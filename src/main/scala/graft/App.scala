@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.{col, lit, to_date}
 
-import graft.domain.{BackfillConfig, OnlineSyncConfig, PointInTimeJoinConfig}
+import graft.domain.{BackfillConfig, OnlineSyncConfig, PointInTimeJoinConfig, Schemas}
 import graft.operators.{BackfillPipeline, OnlineSyncPipeline, PointInTimeJoinPipeline}
 import graft.serving.FeatureLookup
 import graft.sources.{InMemoryKVStore, KVClient}
@@ -93,8 +93,11 @@ object App {
               s"--plan must be 'union' or 'rank', got '$other'")
           }))
         out match {
-          // ds is cached by the pipeline (emptiness check), so this count is cheap
-          case Some(ds) => println(s"[graft] point-in-time-join: wrote ${ds.count()} training rows to ${o("output-path")}")
+          // count what landed, not the plan — counting the returned dataset
+          // would re-run the join
+          case Some(_) =>
+            val written = fetcher.readParquet(spark, o("output-path"), Some(Schemas.trainingData)).count()
+            println(s"[graft] point-in-time-join: wrote $written training rows to ${o("output-path")}")
           case None => println("[graft] point-in-time-join: empty join, nothing written")
         }
 
@@ -1668,9 +1671,10 @@ object App {
           PointInTimeJoinPipeline.run(spark, fetcher, writer, PointInTimeJoinConfig(
             labelsPath = s"$scratch/labels", featuresTable = table,
             outputPath = s"$scratch/training")) match {
-            case Some(ds) =>
-              println(s"[graft] demo: ${ds.count()} leakage-free training rows, e.g.")
-              ds.show(3, truncate = false)
+            case Some(_) =>
+              val training = fetcher.readParquet(spark, s"$scratch/training", Some(Schemas.trainingData))
+              println(s"[graft] demo: ${training.count()} leakage-free training rows, e.g.")
+              training.show(3, truncate = false)
             case None => println("[graft] demo: no labels joined (empty purchase set?)")
           }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.{Fetcher, ProdFetcher, ProdWriter, Writer}
+import graft.sources.{Fetcher, InProcessLocalFileSystem, ProdFetcher, ProdWriter, Writer}
 
 /** A configured session plus the I/O boundary it reads/writes through —
   * the bundle every pipeline entry point takes (reference:
@@ -25,7 +25,7 @@ final case class Platform(spark: SparkSession, fetcher: Fetcher, writer: Writer)
   */
 object PlatformProvider {
 
-  private val defaults = Map(
+  private[graft] val defaults = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     // generated-class cache (static conf, default 100 entries): the
@@ -38,7 +38,12 @@ object PlatformProvider {
     // against any real driver, and the win grows with plan complexity,
     // not with data size.
     "spark.sql.codegen.cache.maxEntries" -> "2000",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    // without libhadoop the stock local filesystem forks a `chmod` per
+    // file (`.crc` files included) and directory it creates; this one sets
+    // the same bits in-process. Local mode's executors share the driver's
+    // Hadoop conf, so task-side writes get it too.
+    "spark.hadoop.fs.file.impl" -> classOf[InProcessLocalFileSystem].getName)
 
   def create(appName: String, master: String,
       config: Map[String, String] = Map.empty,

@@ -85,10 +85,6 @@ object OnlineSyncPipeline {
       cutoffOverride: Option[Column] = None): Long = {
     val features = fetcher.readTable(spark, config.featuresTable)
     val cutoff = cutoffOverride.getOrElse(cutoffFor(config.hoursBack))
-    val rows = payload(latestPerUser(features, cutoff), config.keyPrefix).cache()
-    val n = rows.count()
-    KVSink.write(rows, clientFactory)
-    rows.unpersist()
-    n
+    KVSink.write(payload(latestPerUser(features, cutoff), config.keyPrefix), clientFactory)
   }
 }

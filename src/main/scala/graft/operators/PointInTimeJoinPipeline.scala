@@ -18,7 +18,7 @@ import graft.sources.{Fetcher, Writer}
   * feature history); [[AsOfJoin.joinRank]] is the reference-shaped plan and
   * is kept for plan comparison. Unlike the reference we never `collect()`
   * to test emptiness (PointInTimeJoinPipeline.scala:68 pulls the entire
-  * result to the driver) — `isEmpty` looks at one partition's first row.
+  * result to the driver) — `labels.isEmpty` looks at one input row.
   */
 object PointInTimeJoinPipeline {
 
@@ -51,14 +51,19 @@ object PointInTimeJoinPipeline {
   /** Full pipeline: read labels (parquet) + features (catalog table), join,
     * write training data partitioned by as_of_ts; None when the join is
     * empty (reference: PointInTimeJoinPipeline.scala:67-79 skips the write).
+    *
+    * Both plans emit exactly one row per label, so the labels alone decide
+    * emptiness and the join runs once, inside the write. The returned
+    * dataset is that uncached plan: count what landed by reading
+    * `outputPath` back, not by re-running it.
     */
   def run(spark: SparkSession, fetcher: Fetcher, writer: Writer,
       config: PointInTimeJoinConfig): Option[Dataset[TrainingData]] = {
     import spark.implicits._
     val labels = fetcher.readParquet(spark, config.labelsPath, Some(Schemas.labels))
     val features = fetcher.readTable(spark, config.featuresTable)
-    val training = transform(labels, features, config.useUnionPlan).as[TrainingData].cache()
-    if (training.isEmpty) { training.unpersist(); None }
+    val training = transform(labels, features, config.useUnionPlan).as[TrainingData]
+    if (labels.isEmpty) None
     else {
       writer.writeParquet(training.toDF(), config.outputPath,
         partitionBy = config.partitionBy)

@@ -39,12 +39,17 @@ object KVSink {
     *
     * @param df two string columns: key, value (position 0 and 1)
     * @param clientFactory executor-side factory (must be serializable)
+    * @return the SETs issued, counted in the same job: an action merges
+    *   only successful task attempts' accumulator updates, so a retried
+    *   partition counts once
     */
-  def write(df: DataFrame, clientFactory: () => KVClient): Unit = {
+  def write(df: DataFrame, clientFactory: () => KVClient): Long = {
+    val sets = df.sparkSession.sparkContext.longAccumulator("kv sets")
     df.foreachPartition { rows: Iterator[Row] =>
       val client = clientFactory()
-      try rows.foreach(r => client.set(r.getString(0), r.getString(1)))
+      try rows.foreach { r => client.set(r.getString(0), r.getString(1)); sets.add(1) }
       finally client.close()
     }
+    sets.value
   }
 }

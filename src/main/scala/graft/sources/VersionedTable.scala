@@ -241,7 +241,9 @@ object VersionedTable {
   /** Resolve a snapshot (latest by default) to a DataFrame. Only the data
     * dirs the manifest names are listed; the result is aligned to the
     * writer's schema (column order and types), so partition values read
-    * back with the exact types they were written with.
+    * back with the exact types they were written with. Each dir is read
+    * with the schema the manifest recorded for it, so resolving a snapshot
+    * opens no parquet footer and runs no Spark job.
     */
   def read(spark: SparkSession, rootStr: String,
       version: Option[Long] = None): DataFrame = {
@@ -258,7 +260,7 @@ object VersionedTable {
       else
         m.entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, es) =>
           val base = new Path(root, dir).toString
-          val branch = spark.read.option("basePath", base)
+          val branch = spark.read.schema(m.schemaOf(dir)).option("basePath", base)
             .parquet(es.keys.toSeq.sorted.map(p => s"$base/$p"): _*)
           // add-column evolution: a dir written before a column existed
           // serves NULL for it (the commitPartitions contract)

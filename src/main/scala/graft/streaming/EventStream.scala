@@ -1528,5 +1528,6 @@ object EventStream {
             col("last_event_ts").cast("string").as("last_event_ts")),
             Map("ignoreNullFields" -> "false")).as("value"))
         KVSink.write(payload, clientFactory)
+        ()
       }
 }

@@ -16,6 +16,8 @@ object SharedSparkSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // the local filesystem production sessions run on (no chmod forks)
+    .config("spark.hadoop.fs.file.impl", PlatformProvider.defaults("spark.hadoop.fs.file.impl"))
     .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${System.nanoTime()}")
     .getOrCreate()
 }

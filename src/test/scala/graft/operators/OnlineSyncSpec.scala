@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.lit
 
 import graft.{InMemoryStorage, SparkTestBase, TestFetcher}
 import graft.domain.{FeaturesDaily, OnlineSyncConfig}
-import graft.sources.InMemoryKVStore
+import graft.sources.{InMemoryKVStore, KVClient, KVSink}
 
 /** Online-sync semantics (reference: OnlineSyncPipeline.scala:41-100):
   * freshness filter, latest-row-per-user, string-quoted JSON quirk,
@@ -71,6 +71,27 @@ class OnlineSyncSpec extends SparkTestBase {
     InMemoryKVStore.snapshot("features:user3") should include("\"event_count_7d\":\"0\"")
   }
 
+  test("the sync's count is the SETs its one write job issued: keys written == payload rows") {
+    val storage = new InMemoryStorage
+    storage.write("features_daily", feats.toDF(), "overwrite")
+    val cutoff = lit("2024-01-03").cast("date")
+    val payloadRows = OnlineSyncPipeline.payload(
+      OnlineSyncPipeline.latestPerUser(feats.toDF(), cutoff)).count()
+    OnlineSyncSpec.Store.clear()
+    val n = OnlineSyncPipeline.run(spark, new TestFetcher(storage),
+      OnlineSyncConfig("features_daily"), () => OnlineSyncSpec.Store,
+      cutoffOverride = Some(cutoff))
+    n shouldBe payloadRows
+    n shouldBe OnlineSyncSpec.Store.size.toLong
+    n shouldBe 2L
+
+    // the sink's own count, over more partitions than rows
+    OnlineSyncSpec.Store.clear()
+    val kv = (1 to 25).map(i => (s"k$i", s"v$i")).toDF("key", "value").repartition(8)
+    KVSink.write(kv, () => OnlineSyncSpec.Store) shouldBe 25L
+    OnlineSyncSpec.Store.size shouldBe 25
+  }
+
   test("hoursBack/24 integer division matches the reference quirk") {
     // 36 hours -> 1 day, 168 -> 7 days, 23 -> 0 days (same-day only)
     import org.apache.spark.sql.functions.{current_date, date_sub}
@@ -82,5 +103,18 @@ class OnlineSyncSpec extends SparkTestBase {
         .head()
       got.getDate(0) shouldBe got.getDate(1)
     }
+  }
+}
+
+object OnlineSyncSpec {
+  /** This suite's own store: suites running alongside share InMemoryKVStore.
+    * An object, so executor-side closures reach this instance, not a copy.
+    */
+  object Store extends KVClient {
+    private val map = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    override def set(key: String, value: String): Unit = map.put(key, value)
+    override def get(key: String): Option[String] = Option(map.get(key))
+    def size: Int = map.size
+    def clear(): Unit = map.clear()
   }
 }

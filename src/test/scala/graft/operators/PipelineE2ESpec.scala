@@ -66,6 +66,25 @@ class PipelineE2ESpec extends SparkTestBase {
     storage.rows should not contain key("training_data")
   }
 
+  test("PIT join writes one row per label and returns the uncached plan") {
+    val storage = new InMemoryStorage
+    val labels = Seq(
+      Label("user1", 1.0, ts("2024-01-02 12:00:00")),
+      Label("user1", 1.0, ts("2024-01-02 12:00:00")),  // duplicate: kept
+      Label("user1", 0.0, ts("2024-01-03 08:00:00")),
+      Label("ghost", 0.0, ts("2024-01-02 00:00:00")))  // no features: kept, nulls
+    storage.write("labels", labels.toDF(), "overwrite")
+    storage.write("features_daily",
+      Seq(FeaturesDaily("user1", d("2024-01-01"), Some(1L), Some(1L), Some(0), Some("1"))).toDF(),
+      "overwrite")
+    val out = PointInTimeJoinPipeline.run(spark, new TestFetcher(storage),
+      new TestWriter(storage),
+      PointInTimeJoinConfig("labels", "features_daily", "training_data"))
+    out shouldBe defined
+    out.get.storageLevel shouldBe org.apache.spark.storage.StorageLevel.NONE
+    storage.rows("training_data") should have size labels.size.toLong
+  }
+
   test("storage modes: append accumulates, ignore keeps first write") {
     val storage = new InMemoryStorage
     val df1 = Seq(("a", 1)).toDF("k", "v")

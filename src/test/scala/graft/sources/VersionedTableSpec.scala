@@ -349,6 +349,42 @@ class VersionedTableSpec extends SparkTestBase {
     spark.catalog.tableExists(tbl) shouldBe false
   }
 
+  test("resolving a snapshot runs no Spark job: each dir reads with its recorded schema") {
+    val root = tmpRoot("nojob")
+    VersionedTable.commitOverwrite(
+      days((1L, "2024-01-01", 10L), (2L, "2024-01-02", 20L)), root, Seq("day"))
+    VersionedTable.commitPartitions(days((3L, "2024-01-02", 30L)), root, Seq("day"))
+    // jobs started from this thread carry its job group; suites running
+    // alongside start their own
+    val group = s"vt-read-${System.nanoTime()}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.add(e.properties.getProperty("spark.job.description"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val snapshot =
+      try {
+        sc.setJobGroup(group, "read")
+        val df = VersionedTable.read(spark, root)
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1), 1).count()
+        // the listener bus delivers in order: any job the read started
+        // arrives before the marker
+        val before = Seq.newBuilder[String]
+        var d = seen.poll(60, TimeUnit.SECONDS)
+        while (d != null && d != "marker") { before += d; d = seen.poll(60, TimeUnit.SECONDS) }
+        d shouldBe "marker"
+        before.result() shouldBe empty
+        df
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    snapshot.schema.fieldNames.toSeq shouldBe Seq("user_id", "day", "value")
+    snapshot.as[(Long, String, Long)].collect().toSet shouldBe
+      Set((1L, "2024-01-01", 10L), (3L, "2024-01-02", 30L))
+  }
+
   test("add-column evolution: partition commits widen; old dirs read NULL; time travel keeps the old shape") {
     val root = tmpRoot("evolve")
     VersionedTable.commitOverwrite(
