@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.ToolHarness.Sample
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolHarness.session("graft-bench")
     // Logged-stack watchdog: round 10's driver artifact captured a benign
     // caught analyzer stack as its entire 2000-char tail — exactly where a
     // real failure would need to surface. Count every log event that is
@@ -59,24 +50,10 @@ object Bench {
       }
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-    // noop-format write: every expression executes (a count() would let
-    // Spark prune the very columns the query exists to compute). A failed
-    // run yields None — a crash must never enter the min as a fast sample.
-    // The returned frame unpersists AFTER the clock stops (operators like
-    // PageRank return persisted frames by contract; the release is bench
-    // hygiene, not query cost). Each sample also records its start epoch
-    // second — the burst-adjudication breadcrumb the r13 artifact lacked.
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Long)] = {
-      val started = System.currentTimeMillis() / 1000L
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        try df.unpersist() catch { case scala.util.control.NonFatal(_) => () }
-        Some((dt, started))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+    // each sample records its start epoch second — the burst-adjudication
+    // breadcrumb the r13 artifact lacked — and its jobs, stages and tasks
+    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Sample] =
+      ToolHarness.once(spark)(fn(spark, sfDir))
     // min of two consecutive successful runs: the box runs other tenants,
     // and a single sample regularly swings 2-3x on load spikes; the min is
     // the stable signal the 2x regression budget compares against. Both
@@ -91,47 +68,26 @@ object Bench {
     // samples, and the retry usually lands outside it.
     def sampled(name: String,
                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Seq[Double], Seq[Long], Boolean) = {
+        : (Seq[Sample], Boolean) = {
       val two = Seq(once(fn), once(fn)).flatten
       val prev = prevMins.getOrElse(name, -1.0)
-      val burst = prev > 0 && two.nonEmpty && two.forall(_._1 > 3 * prev)
-      val all = if (burst) two ++ once(fn).toSeq else two
-      (all.map(_._1), all.map(_._2), burst)
+      val burst = prev > 0 && two.nonEmpty && two.forall(_.sec > 3 * prev)
+      (if (burst) two ++ once(fn).toSeq else two, burst)
     }
-    def minOr(samples: Seq[Double]): Double =
-      if (samples.isEmpty) -1.0 else samples.min
-    // Between-queries cache release: every operator-internal persist that
-    // outlives its query (PageRank's returned ranks, composite pipelines'
-    // shared stages) would otherwise accumulate MEMORY_AND_DISK blocks
-    // across the 170+-key run — eviction pressure that confounds burst
-    // adjudication. Clearing between QUERIES (never between a query's two
-    // samples — the warm second sample stays the steady-state read) also
-    // pins each query's cost to itself: nothing rides an earlier query's
-    // leftover cache. Leftover count after release ships in the JSON
+    def minOr(samples: Seq[Sample]): Double =
+      if (samples.isEmpty) -1.0 else samples.map(_.sec).min
+    // Leftover count after the last release ships in the JSON
     // ("persist_leftovers" — expected 0).
-    def releaseCaches(): Unit = {
-      try spark.catalog.clearCache() catch { case scala.util.control.NonFatal(_) => () }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () })
-    }
-    // Sorted-name order, ALWAYS. `SparkEntry.queries` is an unordered Map
-    // whose iteration order reshuffles whenever an entry is added, which
-    // silently moves shared scan/cache build costs between queries across
-    // rounds (round 7 recorded 13-15x apparent regressions on two
-    // unchanged queries this way). Sorting pins who pays the first-touch
-    // cost so per-query deltas across rounds compare like with like.
+    def releaseCaches(): Unit = ToolHarness.releaseCaches(spark)
     // optional arg/env filter (SparkEntry.queryFilter) — dev-only fast
     // path to re-time a handful of queries; the driver passes nothing
     val filterSpec = args.headOption.orElse(sys.env.get("SPARK_GRAFT_ONLY"))
       .filter(_.nonEmpty)
-    val only: String => Boolean =
-      filterSpec.map(SparkEntry.queryFilter).getOrElse(_ => true)
-    val sampledResults = SparkEntry.queries.toSeq.filter(kv => only(kv._1))
-      .sortBy(_._1).map { case (name, fn) =>
-        val r = sampled(name, fn)
-        releaseCaches()
-        name -> r
-      }
+    val sampledResults = ToolHarness.selection(filterSpec).map { name =>
+      val r = sampled(name, SparkEntry.queries(name))
+      releaseCaches()
+      name -> r
+    }
     // Attribution twins (BASELINE.md "Bench attribution"): contract keys
     // like q15/q16/q17 time backfill+operator together; the b-keys time
     // the operator alone against pre-materialized artifact tables.
@@ -144,7 +100,7 @@ object Bench {
         SparkEntry.materializeFeatures(spark, sfDir, featPath)
         releaseCaches()
         SparkEntry.attributionQueries(featPath).toSeq.sortBy(_._1).map { case (name, fn) =>
-          val (s, _, _) = sampled(name, fn)
+          val (s, _) = sampled(name, fn)
           releaseCaches()
           name -> minOr(s)
         }
@@ -162,16 +118,14 @@ object Bench {
     // after the whole suite's codegen pressure has settled; queries still
     // over the line after that ship in "suspect", so a stall is a flagged
     // row in the artifact instead of a judge-side re-run.
-    def overLine(name: String, s: Seq[Double]): Boolean =
+    def overLine(name: String, s: Seq[Sample]): Boolean =
       prevMins.get(name).exists(p => p > 0 && minOr(s) > 3 * p)
-    val cooled: Map[String, (Seq[Double], Seq[Long])] = {
-      val fns = SparkEntry.queries
-      sampledResults.collect { case (name, (s, ts, _)) if overLine(name, s) =>
-        val extra = once(fns(name))
+    val cooled: Map[String, Seq[Sample]] =
+      sampledResults.collect { case (name, (s, _)) if overLine(name, s) =>
+        val extra = once(SparkEntry.queries(name))
         releaseCaches()
-        name -> ((s ++ extra.map(_._1).toSeq, ts ++ extra.map(_._2).toSeq))
+        name -> (s ++ extra)
       }.toMap
-    }
     // Suspect-convergence rounds: a pass that still carries suspects after
     // the cool-down sample is unusable for cross-round comparison ("quiet":
     // false), so instead of only flagging it, retry the remaining suspects
@@ -179,31 +133,29 @@ object Bench {
     // that has since passed converge the artifact to quiet on its own. The
     // rounds taken ship in the JSON ("suspect_rounds") so a converged pass
     // still records that it needed convergence.
-    var convergedSamples: Map[String, (Seq[Double], Seq[Long])] = cooled
-    def samplesOf(name: String, base: (Seq[Double], Seq[Long], Boolean)): Seq[Double] =
-      convergedSamples.get(name).map(_._1).getOrElse(base._1)
+    var convergedSamples: Map[String, Seq[Sample]] = cooled
+    def samplesOf(name: String, base: Seq[Sample]): Seq[Sample] =
+      convergedSamples.getOrElse(name, base)
     var suspectRounds = 0
     while (suspectRounds < 2 &&
-        sampledResults.exists { case (name, base) => overLine(name, samplesOf(name, base)) }) {
+        sampledResults.exists { case (name, (s, _)) => overLine(name, samplesOf(name, s)) }) {
       suspectRounds += 1
-      val fns = SparkEntry.queries
-      sampledResults.foreach { case (name, (s, ts, _)) =>
-        val (cs, cts) = convergedSamples.getOrElse(name, (s, ts))
+      sampledResults.foreach { case (name, (s, _)) =>
+        val cs = samplesOf(name, s)
         if (overLine(name, cs)) {
-          val extra = once(fns(name))
+          val extra = once(SparkEntry.queries(name))
           releaseCaches()
-          convergedSamples += name -> ((cs ++ extra.map(_._1).toSeq, cts ++ extra.map(_._2).toSeq))
+          convergedSamples += name -> (cs ++ extra)
         }
       }
     }
-    val finalSamples = sampledResults.map { case (name, (s, ts, burst)) =>
-      val (s2, ts2) = convergedSamples.getOrElse(name, (s, ts))
-      (name, (s2, ts2, burst))
+    val finalSamples = sampledResults.map { case (name, (s, burst)) =>
+      (name, samplesOf(name, s), burst)
     }
-    val results = finalSamples.map { case (name, (s, _, _)) => name -> minOr(s) }
-    val resampledNames = finalSamples.collect { case (name, (_, _, true)) => name }
+    val results = finalSamples.map { case (name, s, _) => name -> minOr(s) }
+    val resampledNames = finalSamples.collect { case (name, _, true) => name }
     val suspectNames = finalSamples.collect {
-      case (name, (s, _, _)) if overLine(name, s) => name
+      case (name, s, _) if overLine(name, s) => name
     }
     val qs = (results ++ attribution).map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -213,12 +165,18 @@ object Bench {
     // comparable. "sample_starts" carries each sample's start epoch
     // second, so an external-load burst shows as a contiguous wall-clock
     // window instead of needing judge re-runs.
-    val sm = finalSamples.map { case (k, (s, _, _)) =>
-      "\"" + k + "\":[" + s.map(v => math.rint(v * 1000) / 1000).mkString(",") + "]"
+    def perQuery(f: Seq[Sample] => String): String = finalSamples.map { case (k, s, _) =>
+      "\"" + k + "\":" + f(s)
     }.mkString("{", ",", "}")
-    val st = finalSamples.map { case (k, (_, ts, _)) =>
-      "\"" + k + "\":[" + ts.mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    def arr(vs: Seq[Any]): String = vs.mkString("[", ",", "]")
+    val sm = perQuery(s => arr(s.map(v => math.rint(v.sec * 1000) / 1000)))
+    val st = perQuery(s => arr(s.map(_.startedS)))
+    // "counts": each sample's jobs, stages and tasks — the deterministic
+    // fixed-cost decomposition (jobs x stages x plan analysis dominate the
+    // sub-second queries) that carries the regression signal wherever wall
+    // time is too noisy; a first-touch job that disappears in the warm
+    // sample is itself a finding
+    val cn = perQuery(s => s"""{"jobs":${arr(s.map(_.counts.jobs))},"stages":${arr(s.map(_.counts.stages))},"tasks":${arr(s.map(_.counts.tasks))}}""")
     val rs = resampledNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val sus = suspectNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Sum successes only: adding -1.0 sentinels into the total understates
@@ -246,7 +204,7 @@ object Bench {
     if (!quiet)
       System.err.println(s"[bench] NOT QUIET: post-cool-down suspects $sus — " +
         "re-run on a quiet box before committing this artifact")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","quiet":$quiet,"queries":$qs,"samples":$sm,"sample_starts":$st,"resampled":$rs,"suspect":$sus,"suspect_rounds":$suspectRounds,"persist_leftovers":$leftovers,"log_stacks":${stackEvents.size},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","quiet":$quiet,"queries":$qs,"samples":$sm,"sample_starts":$st,"counts":$cn,"resampled":$rs,"suspect":$sus,"suspect_rounds":$suspectRounds,"persist_leftovers":$leftovers,"log_stacks":${stackEvents.size},"sf":"$sfDir"}"""
     println(line)
     // The driver's captured tail truncates at 2000 chars — half the suite's
     // per-query timings vanish from BENCH_r*.json. Persist the full line

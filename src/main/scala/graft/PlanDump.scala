@@ -17,20 +17,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolHarness.session("graft-plandump")
     new java.io.File(outDir).mkdirs()
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(SparkEntry.queryFilter(args(2)))
-    names.foreach { name =>
+    ToolHarness.selection(Some(args(2))).foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val plan = df.queryExecution.explainString(
@@ -41,9 +30,7 @@ object PlanDump {
       } catch { case scala.util.control.NonFatal(e) =>
         println(s"[plandump] FAILED $name: ${e.getMessage}")
       }
-      try spark.catalog.clearCache() catch { case scala.util.control.NonFatal(_) => () }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () })
+      ToolHarness.releaseCaches(spark)
     }
     SparkEntry.cleanupScratch(spark, sfDir)
     spark.stop()

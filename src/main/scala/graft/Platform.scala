@@ -45,6 +45,17 @@ object PlatformProvider {
     // Hadoop conf, so task-side writes get it too.
     "spark.hadoop.fs.file.impl" -> classOf[InProcessLocalFileSystem].getName)
 
+  /** The one session builder: `defaults` plus `master`, `appName` and the
+    * caller's `config` (which wins). `create` adds the Hive catalog; the dev
+    * tools ([[ToolHarness]]) and the test session keep the in-memory one.
+    */
+  private[graft] def builder(appName: String, master: String,
+      config: Map[String, String] = Map.empty): SparkSession.Builder = {
+    val b = SparkSession.builder().appName(appName).master(master)
+    (defaults ++ config).foreach { case (k, v) => b.config(k, v) }
+    b
+  }
+
   def create(appName: String, master: String,
       config: Map[String, String] = Map.empty,
       fetcher: Fetcher = ProdFetcher, writer: Writer = ProdWriter): Platform = {
@@ -54,9 +65,7 @@ object PlatformProvider {
     // durability the reference gets from its Iceberg hadoop catalog
     // (reference: App.scala:140-148). An in-memory catalog would forget
     // every table at JVM exit.
-    val b = SparkSession.builder().appName(appName).master(master).enableHiveSupport()
-    (defaults ++ config).foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = builder(appName, master, config).enableHiveSupport().getOrCreate()
     // every platform session speaks the full native-function SQL surface
     // (poly_hash, vec_dot, text_stats, ... — SURVEY §2.8)
     graft.functions.SqlFunctions.registerAll(spark)

@@ -20,9 +20,9 @@ import graft.operators.{CorpusPipeline, Dedup, Multimodal, Sketches, SimilarityS
   * workload). Embeddings scale each replica's vectors by a constant
   * (cosine structure preserved; query/init sets stay in replica 0).
   *
-  * Same harness conventions as [[Bench]]: noop-format writes (no column
-  * pruning of the very expressions under test), min of 2 samples per
-  * point, cache cleared between scale points so the 1x cache can't serve
+  * Same harness as [[Bench]] ([[ToolHarness]]): noop-format writes (no
+  * column pruning of the very expressions under test), min of 2 samples per
+  * point, caches released between scale points so the 1x cache can't serve
   * the Nx run.
   */
 object ScaleBench {
@@ -32,35 +32,27 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    // optional 2nd arg / env: comma-separated workload-name prefixes —
-    // dev fast path to re-measure one growth curve; a filtered run skips
-    // the recall/increment rows (they are not per-workload) and the
-    // caller redirects its partial output somewhere other than
-    // scale_latest.json
-    val filterSpec = args.drop(1).headOption
-      .orElse(sys.env.get("SPARK_GRAFT_SCALE_ONLY")).filter(_.nonEmpty)
-    val only: String => Boolean = filterSpec match {
-      case Some(spec) =>
-        val pats = spec.split(',').toSeq
-        name => pats.exists(p => name == p || name.startsWith(p))
-      case None => _ => true
-    }
+    // optional 2nd arg / env: comma-separated row-name patterns
+    // (SparkEntry.queryFilter over rowNames) — dev fast path to re-measure
+    // one growth curve; the caller redirects its partial output somewhere
+    // other than scale_latest.json
+    val only = ToolHarness.only(args.drop(1).headOption
+      .orElse(sys.env.get("SPARK_GRAFT_SCALE_ONLY")))
     // the growth comparison and the (mult-1)-replica increment base are
     // both meaningless below 2x — and scaledDocs(0) would empty-reduce
     require(mult >= 2, s"ScaleBench needs a multiplier >= 2, got $mult")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sweep(ToolHarness.session("graft-scalebench"), sfDir, mult, only)
+  }
 
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+  /** The 1x tables and their scaled replicas. Reads are lazy and resolve the
+    * active session, so the workload list builds without a session or data.
+    */
+  private final class Corpus(sfDir: String) {
+    private def spark: SparkSession = SparkSession.active
+
+    lazy val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    lazy val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
     def docReplica(i: Int): DataFrame = {
       val rot = Alpha.drop(i % 26) + Alpha.take(i % 26)
@@ -133,8 +125,11 @@ object ScaleBench {
       col("event_type"), col("value"))
     def scaledEventsHistory(k: Int): DataFrame =
       (0 until k).map(eventsHistoryReplica).reduce(_ unionByName _)
+  }
 
-    val workloads: Seq[(String, Int => DataFrame)] = Seq(
+  private def workloads(c: Corpus): Seq[(String, Int => DataFrame)] = {
+    import c._
+    Seq(
       // q167 shape: per-user ordered collect + running fold emitting every
       // prefix — per-user cost constant under user-growth, so the curve
       // should read the one user-keyed shuffle's linearity
@@ -533,30 +528,44 @@ object ScaleBench {
           "weight", n = 30)
           .select(col("doc_id"), col("host"), col("weight"), col("priority"))
       }))
+  }
 
-    def once(df: => DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        df.write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+  private val RecallProbes = Seq(2, 8)
+  private val PlantedMethods = Seq("ivf", "pq", "ivfpq")
+
+  /** Every row name the sweep emits, in output order: the growth rows, then
+    * the recall, increment and audio-state rows. The tool's filter
+    * ([[SparkEntry.queryFilter]]) selects among these names.
+    */
+  val rowNames: Seq[String] =
+    workloads(new Corpus("")).map(_._1) ++
+      RecallProbes.map(p => s"knn_ivf_recall@3_probe$p") ++
+      PlantedMethods.map(m => s"planted_recall@10_$m") ++
+      Seq("corpus_increment_vs_full", "attribution_increment_vs_full", "audio_state_pairs")
+
+  /** Times every selected row at 1x and `mult`x and prints the JSON line. */
+  private def sweep(spark: SparkSession, sfDir: String, mult: Int,
+      only: String => Boolean): Unit = {
+    val corpus = new Corpus(sfDir)
+    import corpus._
+
     def sampled(df: => DataFrame): Seq[Double] =
-      Seq(once(df), once(df)).flatten
+      Seq.fill(2)(ToolHarness.once(spark)(df)).flatten.map(_.sec)
     def minOr(samples: Seq[Double]): Double =
       if (samples.isEmpty) -1.0 else samples.min
     def minOf2(df: => DataFrame): Double = minOr(sampled(df))
     def arr(samples: Seq[Double]): String =
       samples.map(v => math.rint(v * 1000) / 1000).mkString("[", ",", "]")
+    def releaseCaches(): Unit = ToolHarness.releaseCaches(spark)
 
     // growth rows carry the RAW samples for both scale points: round 9's
     // corpus_pipeline growth read 6.2x in one pass vs 1.5-1.9x in two
     // earlier rounds, and without the per-point spread in the artifact a
     // curve shift is indistinguishable from a load spike on one point
-    val rows = workloads.filter(kv => only(kv._1)).map { case (name, fn) =>
-      spark.sharedState.cacheManager.clearCache()
+    val rows = workloads(corpus).filter(kv => only(kv._1)).map { case (name, fn) =>
+      releaseCaches()
       val s1 = sampled(fn(1))
-      spark.sharedState.cacheManager.clearCache()
+      releaseCaches()
       val sN = sampled(fn(mult))
       val (t1, tN) = (minOr(s1), minOr(sN))
       val growth = if (t1 > 0 && tN > 0) tN / t1 else -1.0
@@ -578,19 +587,19 @@ object ScaleBench {
     // vectors are scaled copies of replica 0 (cosine 1.0 with the
     // queries), so the true top-k IS the replica set and lands in the
     // query's own cell; expect ~1.0 there regardless of probe width.
-    val recallRows = if (filterSpec.isDefined) Seq.empty[String] else {
+    val recallRows = {
       def pairs(df: DataFrame) =
         df.select("query_id", "neighbor_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       def one(mul: Int, k: Int, nProbe: Int): Double = {
-        spark.sharedState.cacheManager.clearCache()
+        releaseCaches()
         val e = scaledEmb(mul)
         val truth = pairs(SimilaritySearch.bruteKnn(e, "vec_id < 10", k))
         val got = pairs(SimilaritySearch.ivfKnnTrained(e, "vec_id < 10", k,
           initPred = "vec_id >= 100 AND vec_id < 116", iters = 2, nProbe = nProbe))
         if (truth.isEmpty) -1.0 else (got & truth).size.toDouble / truth.size
       }
-      Seq(2, 8).map { nProbe =>
+      RecallProbes.filter(p => only(s"knn_ivf_recall@3_probe$p")).map { nProbe =>
         val (r1, rN) = (one(1, 3, nProbe), one(mult, 3, nProbe))
         s""""knn_ivf_recall@3_probe$nProbe":{"x1":${math.rint(r1 * 1000) / 1000},"x$mult":${math.rint(rN * 1000) / 1000}}"""
       }
@@ -614,10 +623,10 @@ object ScaleBench {
     // so the shortlist must cover the ~100-member cell population for
     // exact top-10 recovery; that sizing rule IS the finding the row
     // documents.
-    // gate on ANY of the three emitted row names — a dev filter naming
-    // only planted_recall@10_pq / _ivfpq must still run this block
-    val plantedRows = if (!Seq("ivf", "pq", "ivfpq")
-        .exists(m => only(s"planted_recall@10_$m"))) Seq.empty[String] else {
+    // one block computes all three methods; it runs when any of their rows
+    // is selected and emits the selected ones
+    val plantedSel = PlantedMethods.filter(m => only(s"planted_recall@10_$m"))
+    val plantedRows = if (plantedSel.isEmpty) Seq.empty[String] else {
       val members = 100L
       val dim = 32
       def plantedEmb(k: Int): DataFrame = {
@@ -643,7 +652,7 @@ object ScaleBench {
         df.select("query_id", "neighbor_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       def recallsAt(mul: Int): Map[String, Double] = {
-        spark.sharedState.cacheManager.clearCache()
+        releaseCaches()
         val e = plantedEmb(mul)
         val truth = pairs(SimilaritySearch.bruteKnn(e, qPred, 10))
         def r(got: Set[(Long, Long)]): Double =
@@ -658,7 +667,7 @@ object ScaleBench {
             shortlist = 128, nProbe = 2, m = 8, dim = dim))))
       }
       val (r1, rN) = (recallsAt(1), recallsAt(mult))
-      Seq("ivf", "pq", "ivfpq").map { meth =>
+      plantedSel.map { meth =>
         s""""planted_recall@10_$meth":{"x1":${math.rint(r1(meth) * 1000) / 1000},"x$mult":${math.rint(rN(meth) * 1000) / 1000}}"""
       }
     }
@@ -669,8 +678,8 @@ object ScaleBench {
     // timed region (exactly the --state-path workflow); timed =
     // incrementState(one 1x shard) + prepareFromState off the reloaded
     // tables, vs the full one-shot prepare over all mult replicas.
-    val incRow = if (filterSpec.isDefined) Seq.empty[String] else Seq {
-      spark.sharedState.cacheManager.clearCache()
+    val incRow = if (!only("corpus_increment_vs_full")) Seq.empty[String] else Seq {
+      releaseCaches()
       val stateDir = s"/tmp/graft_scalebench_state_${spark.sparkContext.applicationId}"
       try {
         val base = CorpusPipeline.buildState(scaledDocs(mult - 1))
@@ -685,7 +694,7 @@ object ScaleBench {
         val shard = docReplica(mult - 1)
         val tInc = minOf2(
           CorpusPipeline.prepareFromState(CorpusPipeline.incrementState(stored, shard)))
-        spark.sharedState.cacheManager.clearCache()
+        releaseCaches()
         val tFull = minOf2(CorpusPipeline.prepare(scaledDocs(mult)))
         val ratio = if (tInc > 0 && tFull > 0) tInc / tFull else -1.0
         s""""corpus_increment_vs_full":{"increment":$tInc,"full_x$mult":$tFull,"ratio":${math.rint(ratio * 100) / 100}}"""
@@ -699,8 +708,8 @@ object ScaleBench {
     // state vs the full one-shot recompute over all mult replicas. The
     // ratio ALSO reflects that the increment only credits the shard's
     // conversions — that is the contract, not a discount.
-    val attrIncRow = if (filterSpec.isDefined) Seq.empty[String] else Seq {
-      spark.sharedState.cacheManager.clearCache()
+    val attrIncRow = if (!only("attribution_increment_vs_full")) Seq.empty[String] else Seq {
+      releaseCaches()
       val stateDir = s"/tmp/graft_scalebench_attr_${spark.sparkContext.applicationId}"
       try {
         graft.operators.Attribution.attributionState(scaledEventsHistory(mult - 1))
@@ -708,7 +717,7 @@ object ScaleBench {
         val stored = spark.read.parquet(stateDir)
         val shard = eventsHistoryReplica(mult - 1)
         val tInc = minOf2(graft.operators.Attribution.incrementAttribution(stored, shard))
-        spark.sharedState.cacheManager.clearCache()
+        releaseCaches()
         val tFull = minOf2(graft.operators.Attribution.linearAttribution(scaledEventsHistory(mult)))
         val ratio = if (tInc > 0 && tFull > 0) tInc / tFull else -1.0
         s""""attribution_increment_vs_full":{"increment":$tInc,"full_x$mult":$tFull,"ratio":${math.rint(ratio * 100) / 100}}"""
@@ -723,9 +732,9 @@ object ScaleBench {
     // audio_neardup row (decode + pairs fused — its 13.49x reading was
     // javax.sound SPI-lock contention, not join fan-out).
     val audioStateRow =
-      if (filterSpec.isDefined && !only("audio_state_pairs")) Seq.empty[String]
+      if (!only("audio_state_pairs")) Seq.empty[String]
       else Seq {
-        spark.sharedState.cacheManager.clearCache()
+        releaseCaches()
         val base = s"/tmp/graft_scalebench_astate_${spark.sparkContext.applicationId}"
         try {
           def stateOf(k: Int, dir: String): DataFrame = {
@@ -737,7 +746,7 @@ object ScaleBench {
           val st1 = stateOf(1, s"$base/x1")
           val stN = stateOf(mult, s"$base/x$mult")
           val s1 = sampled(Multimodal.perceptualPairsFromState(st1))
-          spark.sharedState.cacheManager.clearCache()
+          releaseCaches()
           val sN = sampled(Multimodal.perceptualPairsFromState(stN))
           val (t1, tN) = (minOr(s1), minOr(sN))
           val growth = if (t1 > 0 && tN > 0) tN / t1 else -1.0

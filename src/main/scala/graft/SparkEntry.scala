@@ -69,10 +69,10 @@ object SparkEntry {
     graft.sources.ProdWriter.dropTable(s, s"graft_q34_supplier_$tag")
   }
 
-  /** The query filter every dev tool (Bench, Verify, JobStats, PlanDump)
-    * applies to its comma-separated pattern list: a pattern selects the
-    * exact name, or the names it prefixes up to the underscore — `q9`
-    * selects q9_*, never q90-q99.
+  /** The query filter every dev tool (Bench, Verify, PlanDump, ScaleBench —
+    * through [[ToolHarness]]) applies to its comma-separated pattern list: a
+    * pattern selects the exact name, or the names it prefixes up to the
+    * underscore — `q9` selects q9_*, never q90-q99.
     */
   def queryFilter(spec: String): String => Boolean = {
     val pats = spec.split(',').toSeq

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Contract-surface type lint: the driver's checker loads each result
@@ -45,18 +44,8 @@ object Verify {
     // to re-verify a handful of queries (driver passes 2 args), matched by
     // SparkEntry.queryFilter
     val (sfDir, outDir) = (args(0), args(1))
-    val only: String => Boolean =
-      if (args.length > 2) SparkEntry.queryFilter(args(2)) else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = ToolHarness.only(args.lift(2))
+    val spark = ToolHarness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only(name))

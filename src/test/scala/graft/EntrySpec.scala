@@ -37,4 +37,16 @@ class EntrySpec extends SparkTestBase {
     names.filter(SparkEntry.queryFilter("q15,q09")).toSet shouldBe
       Set("q15_pit_join", "q09_conditional_agg")
   }
+
+  test("ScaleBench's rows take the same filter: a prefix selects up to the underscore") {
+    val rows = ScaleBench.rowNames
+    rows.distinct shouldBe rows
+    rows should contain allOf ("corpus_pipeline", "attribution", "audio_state_pairs")
+    // a bare startsWith would select corpus_pipeline
+    rows.filter(SparkEntry.queryFilter("corp")) shouldBe empty
+    rows.filter(SparkEntry.queryFilter("attribution")) shouldBe
+      Seq("attribution", "attribution_history", "attribution_increment_vs_full")
+    rows.filter(SparkEntry.queryFilter("planted_recall@10")) shouldBe
+      Seq("planted_recall@10_ivf", "planted_recall@10_pq", "planted_recall@10_ivfpq")
+  }
 }

@@ -6,19 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** One shared local session for the whole test JVM (reference pattern:
-  * SparkTestBase.scala:14-37 — local master, tiny shuffle partition count,
-  * UTC). Suites mix this in; the session is created once lazily.
+  * SparkTestBase.scala:14-37 — local master, tiny shuffle partition count).
+  * Built by [[PlatformProvider.builder]], so the suite runs the defaults
+  * that ship (UTC, AQE, codegen cache, local filesystem) on the in-memory
+  * catalog. Suites mix this in; the session is created once lazily.
   */
 object SharedSparkSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the local filesystem production sessions run on (no chmod forks)
-    .config("spark.hadoop.fs.file.impl", PlatformProvider.defaults("spark.hadoop.fs.file.impl"))
-    .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${System.nanoTime()}")
+  lazy val spark: SparkSession = PlatformProvider.builder("graft-test", "local[4]", Map(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" -> s"/tmp/graft-test-warehouse-${System.nanoTime()}"))
     .getOrCreate()
 }
 
