@@ -1404,11 +1404,11 @@ object CurationQueries {
   /** Winnowing fingerprint CTE chain over source CTE `src` (doc_id, text,
     * n), emitting `fp_$tag` (doc_id, text, n, h, apos) — shared by the
     * q95 and q98 twins; constants interpolated from [[graft.functions
-    * .WinnowImpl]] so the selections cannot drift from the kernel.
+    * .WinnowFingerprints]] so the selections cannot drift from the kernel.
     */
   private def winnowFpSql(tag: String, src: String): String = {
     val k = SubstrK; val w = SubstrLen - SubstrK + 1
-    val posM = graft.functions.WinnowImpl.PosM
+    val posM = graft.functions.WinnowFingerprints.PosM
     s"""g_$tag AS (SELECT doc_id, text, n, CAST(i AS BIGINT) AS pos,
        |  ${polyHashSql(s"substr(text, CAST(i AS INT), $k)")} AS h
        |  FROM $src, LATERAL (SELECT unnest(range(1, n - $k + 2)) AS i) t),
@@ -1756,7 +1756,7 @@ object CurationQueries {
 
     // winnowing twin: per-position k-gram polyhashes (the shared
     // polyHashSql fold), the SAME encoded (hash, rightmost-pos) window
-    // minimum the kernel uses (constants interpolated from WinnowImpl,
+    // minimum the kernel uses (constants interpolated from WinnowFingerprints,
     // so the selections cannot drift), then the offset-spine substr
     // verification (provably the predicate the Spark side's O(extent)
     // kernel evaluates)

@@ -1,18 +1,26 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[CharNgramHashBuckets]] — standalone object so
-  * the static forwarder is callable from janino-generated code.
+/** Native codegen'd `char_ngram_hash_buckets(text, n, buckets)`: the hashed
+  * char-n-gram feature stream of a document as `array<long>`, one element per
+  * length-`n` character window of the normalized token stream.
+  *
+  * Replaces the composed HOF (`transform(sequence(1, length(norm) - n + 1),
+  * i -> polyHash(norm.substr(i, n)) % buckets)` over
+  * `norm = array_join(tokens(text), " ")` — kept as
+  * [[graft.operators.QualityClassifier.charNgramBucketsHof]], the bit-parity
+  * witness), whose interpreted lambda re-evaluates the full tokenize+join
+  * `norm` expression once PER WINDOW — O(chars^2) per document. Round-13
+  * probe at sf0.1: the composed form held the q149 scale row at ~30s/scale
+  * point nearly independent of corpus multiplier (partition-parallelism
+  * masking pure per-row cost); this loop is one O(chars * n) pass inside
+  * whole-stage codegen.
   */
-object CharNgramHashBucketsImpl {
+object CharNgramHashBuckets {
 
   /** text -> hashed buckets of every length-`n` CHARACTER window of the
     * normalized token stream, in stream order (NOT distinct — NB term
@@ -64,52 +72,14 @@ object CharNgramHashBucketsImpl {
     }
     new GenericArrayData(out)
   }
-}
 
-/** Native codegen'd `char_ngram_hash_buckets(text, n, buckets)`: the hashed
-  * char-n-gram feature stream of a document as `array<long>`, one element per
-  * length-`n` character window of the normalized token stream.
-  *
-  * Replaces the composed HOF (`transform(sequence(1, length(norm) - n + 1),
-  * i -> polyHash(norm.substr(i, n)) % buckets)` over
-  * `norm = array_join(tokens(text), " ")` — kept as
-  * [[graft.operators.QualityClassifier.charNgramBucketsHof]], the bit-parity
-  * witness), whose interpreted lambda re-evaluates the full tokenize+join
-  * `norm` expression once PER WINDOW — O(chars^2) per document. Round-13
-  * probe at sf0.1: the composed form held the q149 scale row at ~30s/scale
-  * point nearly independent of corpus multiplier (partition-parallelism
-  * masking pure per-row cost); this loop is one O(chars * n) pass inside
-  * whole-stage codegen.
-  */
-case class CharNgramHashBuckets(child: Expression, n: Int, buckets: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType if n < 1 =>
-        TypeCheckResult.TypeCheckFailure(s"window width must be >= 1, got $n")
-      case StringType if buckets < 1 =>
-        TypeCheckResult.TypeCheckFailure(s"buckets must be >= 1, got $buckets")
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
+  def charNgramHashBuckets(text: Column, n: Int, buckets: Int): Column =
+    Kernel.call("char_ngram_hash_buckets", this, "eval", ArrayType(LongType, containsNull = false),
+        Seq(text)) {
+      case Seq(StringType) if n < 1 => Left(s"window width must be >= 1, got $n")
+      case Seq(StringType) if buckets < 1 => Left(s"buckets must be >= 1, got $buckets")
+      case Seq(StringType) => Right(Seq(n, buckets))
+      case Seq(other) => Left(
         s"char_ngram_hash_buckets requires a string input, got ${other.catalogString}")
     }
-
-  override def nullSafeEval(input: Any): Any =
-    CharNgramHashBucketsImpl.eval(input.asInstanceOf[UTF8String], n, buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.CharNgramHashBucketsImpl.eval($a, $n, $buckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object CharNgramHashBuckets {
-  def charNgramHashBuckets(text: Column, n: Int, buckets: Int): Column =
-    GraftColumnBridge.column(
-      CharNgramHashBuckets(GraftColumnBridge.expression(text), n, buckets))
 }

@@ -1,18 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Shared implementation for [[EwmaScan]]'s eval and generated code — a
-  * standalone object so the static forwarder is directly callable from
-  * janino-generated Java (the [[GreedyEncodeImpl]] pattern).
+/** Native codegen'd EWMA prefix scan: `ewma_scan(values)` -> the running
+  * fixed-point accumulator after each element.
+  *
+  * Why native: the composed formulation is an `aggregate` whose
+  * accumulator struct carries the growing prefix array, appended via
+  * `concat(acc.a, array(step))` — O(history^2) array copies per user,
+  * with the step expression inlined twice (the interpreted HOF evaluates
+  * it once for the scalar and once for the appended element). This loop
+  * runs inside whole-stage codegen and is O(history) with one output
+  * array. The composed twin stays in DecayFeaturesSpec as the bit-parity
+  * witness (the RepStats/GreedyEncode discipline).
   */
-object EwmaScanImpl {
+object EwmaScan {
 
   /** One O(n) pass over the fixed-point value array emitting every prefix
     * accumulator of `s_k = (decayPpm * s_{k-1}) div 1e6 + v_k` (s_0 = 0).
@@ -42,44 +46,10 @@ object EwmaScanImpl {
     }
     new GenericArrayData(out)
   }
-}
 
-/** Native codegen'd EWMA prefix scan: `ewma_scan(values)` -> the running
-  * fixed-point accumulator after each element.
-  *
-  * Why native: the composed formulation is an `aggregate` whose
-  * accumulator struct carries the growing prefix array, appended via
-  * `concat(acc.a, array(step))` — O(history^2) array copies per user,
-  * with the step expression inlined twice (the interpreted HOF evaluates
-  * it once for the scalar and once for the appended element). This loop
-  * runs inside whole-stage codegen and is O(history) with one output
-  * array. The composed twin stays in DecayFeaturesSpec as the bit-parity
-  * witness (the RepStats/GreedyEncode discipline).
-  */
-case class EwmaScan(child: Expression, decayPpm: Long) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"ewma_scan requires array<bigint>, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(values: Any): Any =
-    EwmaScanImpl.scan(values.asInstanceOf[ArrayData], decayPpm)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.EwmaScanImpl.scan($v, ${decayPpm}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object EwmaScan {
   def ewmaScan(values: Column, decayPpm: Long): Column =
-    GraftColumnBridge.column(EwmaScan(
-      GraftColumnBridge.expression(values), decayPpm))
+    Kernel.call("ewma_scan", this, "scan", ArrayType(LongType, containsNull = true), Seq(values)) {
+      case Seq(ArrayType(LongType, _)) => Right(Seq(decayPpm))
+      case Seq(other) => Left(s"ewma_scan requires array<bigint>, got ${other.catalogString}")
+    }
 }

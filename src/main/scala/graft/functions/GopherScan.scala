@@ -1,19 +1,29 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-row Gopher-metric kernel shared by eval and generated code: every
-  * raw count the seven Gopher rules need, in TWO byte passes over the
-  * text (the original buffer for words/lines/symbols, the lowercased
-  * buffer for stopword tokens — the composed HOF form walks the string
-  * at least SEVEN times through interpreted lambda frames and regexes).
+/** Native one-pass Gopher raw metrics: struct(n_words, sum_word_len,
+  * alpha_words, symbol_count, n_lines, bullet_lines, ellipsis_lines,
+  * n_stop_present). The rule flags and ratios stay in Column math
+  * downstream ([[TextFunctions.gopherRules]]), so outputs are
+  * bit-identical to the HOF formulation — which is retained as
+  * [[TextFunctions.gopherRulesHof]], the parity witness.
+  *
+  * Why native: the HOF form split the text three ways and evaluated
+  * interpreted lambda frames per token across 16 output columns — the
+  * largest codegen producer in the corpus-quality family (the q118
+  * code-cache incident class). This is one tight byte loop called once
+  * per row; the sixteen outputs read fields of ONE common subexpression.
+  *
+  * The kernel computes every raw count the seven Gopher rules need, in
+  * TWO byte passes over the text (the original buffer for
+  * words/lines/symbols, the lowercased buffer for stopword tokens — the
+  * composed HOF form walks the string at least SEVEN times through
+  * interpreted lambda frames and regexes).
   *
   * Byte-exact contract with the HOF witness ([[TextFunctions.gopherRulesHof]]),
   * pinned by GopherRulesSpec:
@@ -31,14 +41,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    [[TokenScan]] (`split(lower(text), "[^a-z0-9]+")`) and counts how
   *    many DISTINCT stopwords appear (presence, not occurrences).
   */
-class GopherScanImpl(stopwords: Array[String]) extends Serializable {
+object GopherScan {
 
   // presence is tracked in one 64-bit mask (`presentMask |= 1L << w`);
   // a 65th entry would silently alias bit 0 (1L << 64 == 1L << 0) and
   // undercount distinct stopwords — fail loudly instead
-  require(stopwords.length <= 64,
-    s"GopherScanImpl tracks stopword presence in a 64-bit mask: " +
-      s"got ${stopwords.length} stopwords (max 64)")
+  private val stopwords: Array[String] = {
+    val stopwords = TextFunctions.GopherStopSmall.toArray
+    require(stopwords.length <= 64,
+      s"GopherScan tracks stopword presence in a 64-bit mask: " +
+        s"got ${stopwords.length} stopwords (max 64)")
+    stopwords
+  }
 
   @inline private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
@@ -130,49 +144,6 @@ class GopherScanImpl(stopwords: Array[String]) extends Serializable {
       nWords, sumLen, alphaWords, symbols,
       nLines, bulletLines, ellipsisLines, nStopPresent))
   }
-}
-
-/** Native one-pass Gopher raw metrics: struct(n_words, sum_word_len,
-  * alpha_words, symbol_count, n_lines, bullet_lines, ellipsis_lines,
-  * n_stop_present). The rule flags and ratios stay in Column math
-  * downstream ([[TextFunctions.gopherRules]]), so outputs are
-  * bit-identical to the HOF formulation — which is retained as
-  * [[TextFunctions.gopherRulesHof]], the parity witness.
-  *
-  * Why native: the HOF form split the text three ways and evaluated
-  * interpreted lambda frames per token across 16 output columns — the
-  * largest codegen producer in the corpus-quality family (the q118
-  * code-cache incident class). This is one tight byte loop with a
-  * `doGenCode` one-liner; the sixteen outputs read fields of ONE common
-  * subexpression.
-  */
-case class GopherScan(child: Expression) extends UnaryExpression {
-
-  private val impl = new GopherScanImpl(
-    TextFunctions.GopherStopSmall.toArray)
-
-  override def dataType: DataType = GopherScan.schema
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"gopher_scan requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    impl.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gopherScanImpl", impl, classOf[GopherScanImpl].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.eval($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object GopherScan {
 
   val schema: StructType = StructType(
     Seq("n_words", "sum_word_len", "alpha_words", "symbol_count",
@@ -180,5 +151,8 @@ object GopherScan {
       .map(StructField(_, LongType, nullable = false)))
 
   def gopherScan(text: Column): Column =
-    GraftColumnBridge.column(GopherScan(GraftColumnBridge.expression(text)))
+    Kernel.call("gopher_scan", this, "eval", schema, Seq(text)) {
+      case Seq(StringType) => Right(Nil)
+      case Seq(other) => Left(s"gopher_scan requires a string input, got ${other.catalogString}")
+    }
 }

@@ -1,19 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[GreedyEncode]]'s eval and generated code —
-  * a standalone object so the static forwarder is directly callable from
-  * janino-generated Java (the [[PolyHashImpl]] pattern).
+/** Native codegen'd greedy longest-match tokenizer kernel:
+  * `greedy_encode(word, pieces)` -> `array<int>` of piece ids under
+  * [[graft.operators.Packing]]'s id scheme.
+  *
+  * Why native: the composed formulation is a per-position `transform`
+  * over the piece array feeding an `aggregate` walk — higher-order
+  * functions whose lambdas evaluate interpreted, one frame per
+  * (position x piece). This loop runs inside whole-stage codegen and
+  * scans each piece's code points at most once per position. The
+  * composed twin stays in PackingSpec as the bit-parity witness
+  * (the PolyHash/RepStats discipline).
   */
-object GreedyEncodeImpl {
+object GreedyEncode {
 
   /** UTF-8 bytes -> code points (the house `ascii`/`substring` domain —
     * positions in the composed fold are code-point positions). Char
@@ -122,50 +126,15 @@ object GreedyEncodeImpl {
   }
 
   private def charId(cp: Int): Int = if (cp >= 97) cp - 94 else cp - 19
-}
 
-/** Native codegen'd greedy longest-match tokenizer kernel:
-  * `greedy_encode(word, pieces)` -> `array<int>` of piece ids under
-  * [[graft.operators.Packing]]'s id scheme.
-  *
-  * Why native: the composed formulation is a per-position `transform`
-  * over the piece array feeding an `aggregate` walk — higher-order
-  * functions whose lambdas evaluate interpreted, one frame per
-  * (position x piece). This loop runs inside whole-stage codegen and
-  * scans each piece's code points at most once per position. The
-  * composed twin stays in PackingSpec as the bit-parity witness
-  * (the PolyHash/RepStats discipline).
-  */
-case class GreedyEncode(left: Expression, right: Expression, maxWordLen: Int)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(s: StructType, _))
-        if s.length == 2 && s(0).dataType == StringType &&
-          s(1).dataType == org.apache.spark.sql.types.LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
+  def greedyEncode(word: Column, pieces: Column, maxWordLen: Int): Column =
+    Kernel.call("greedy_encode", this, "encode", ArrayType(IntegerType, containsNull = false),
+        Seq(word, pieces)) {
+      case Seq(StringType, ArrayType(s: StructType, _))
+        if s.length == 2 && s(0).dataType == StringType && s(1).dataType == LongType =>
+        Right(Seq(maxWordLen))
+      case Seq(l, r) => Left(
         s"greedy_encode requires (string, array<struct<piece: string, id: bigint>>), " +
           s"got (${l.catalogString}, ${r.catalogString})")
     }
-
-  override def nullSafeEval(word: Any, pieces: Any): Any =
-    GreedyEncodeImpl.encode(
-      word.asInstanceOf[UTF8String], pieces.asInstanceOf[ArrayData], maxWordLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, p) =>
-      s"${ev.value} = graft.functions.GreedyEncodeImpl.encode($w, $p, $maxWordLen);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object GreedyEncode {
-  def greedyEncode(word: Column, pieces: Column, maxWordLen: Int): Column =
-    GraftColumnBridge.column(GreedyEncode(
-      GraftColumnBridge.expression(word), GraftColumnBridge.expression(pieces), maxWordLen))
 }

@@ -1,17 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Shared implementation for [[MinHashSignature]] — standalone object so the
-  * static forwarder is callable from generated code.
+/** Native codegen'd MinHash signature over a shingle-hash set: the pinned
+  * universal-hash family of [[TextFunctions.MinhashA]]/[[TextFunctions.MinhashB]],
+  * k mins accumulated in one pass.
+  *
+  * The composed form ([[TextFunctions.minhashSignatureHof]]) evaluates k
+  * separate `array_min(transform(...))` chains — k interpreted lambda
+  * frames per element. Bit-exact integer math either way (witness test in
+  * MinHashSignatureSpec), so the oracle twins are untouched.
   */
-object MinHashSignatureImpl {
+object MinHashSignature {
 
   private val A = TextFunctions.MinhashA.toArray
   private val B = TextFunctions.MinhashB.toArray
@@ -47,40 +49,11 @@ object MinHashSignatureImpl {
     if (!sawValue) return new GenericArrayData(new Array[Any](K))
     new GenericArrayData(mins)
   }
-}
 
-/** Native codegen'd MinHash signature over a shingle-hash set: the pinned
-  * universal-hash family of [[TextFunctions.MinhashA]]/[[TextFunctions.MinhashB]],
-  * k mins accumulated in one pass.
-  *
-  * The composed form ([[TextFunctions.minhashSignatureHof]]) evaluates k
-  * separate `array_min(transform(...))` chains — k interpreted lambda
-  * frames per element. Bit-exact integer math either way (witness test in
-  * MinHashSignatureSpec), so the oracle twins are untouched.
-  */
-case class MinHashSignature(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"minhash_signature requires array<bigint>, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSignatureImpl.eval(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.MinHashSignatureImpl.eval($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
   def minhashSignature(hashes: Column): Column =
-    GraftColumnBridge.column(MinHashSignature(GraftColumnBridge.expression(hashes)))
+    Kernel.call("minhash_signature", this, "eval", ArrayType(LongType, containsNull = true),
+        Seq(hashes)) {
+      case Seq(ArrayType(LongType, _)) => Right(Nil)
+      case Seq(other) => Left(s"minhash_signature requires array<bigint>, got ${other.catalogString}")
+    }
 }

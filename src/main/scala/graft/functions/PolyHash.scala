@@ -1,17 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.SparkException
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[PolyHash]]'s eval and generated code — a
-  * standalone object so the static forwarder `PolyHashImpl.hash(byte[])` is
-  * directly callable from janino-generated Java.
+/** The kernel behind [[PolyHash]]: a standalone object, so its static
+  * forwarder `PolyHashImpl.hash` is directly callable from generated Java.
   */
 object PolyHashImpl {
   /** Decode UTF-8 code points and left-fold
@@ -41,6 +35,8 @@ object PolyHashImpl {
     }
     acc
   }
+
+  def hash(s: UTF8String): Long = hash(s.getBytes)
 }
 
 /** Native codegen'd polynomial rolling hash of a string:
@@ -57,44 +53,12 @@ object PolyHashImpl {
   * (round-1 bench: q25 at 50s, ~3x recomputed). This loop runs inside
   * whole-stage codegen.
   */
-case class PolyHash(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"poly_hash requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    PolyHashImpl.hash(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PolyHashImpl.hash($a.getBytes());")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PolyHash {
 
   /** DSL entry: `polyHash(s)` as a Column. */
   def polyHash(s: Column): Column =
-    GraftColumnBridge.column(PolyHash(GraftColumnBridge.expression(s)))
-
-  private val info = new ExpressionInfo(classOf[PolyHash].getName, "poly_hash")
-  private val builder = (exprs: Seq[Expression]) => {
-    if (exprs.length != 1) {
-      throw new SparkException("poly_hash takes exactly 1 argument")
+    Kernel.call("poly_hash", PolyHashImpl, "hash", LongType, Seq(s)) {
+      case Seq(StringType) => Right(Nil)
+      case Seq(other) => Left(s"poly_hash requires a string input, got ${other.catalogString}")
     }
-    PolyHash(exprs.head)
-  }
-
-  /** SQL registration for an existing session: `SELECT poly_hash(s)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("poly_hash"), info, builder)
 }

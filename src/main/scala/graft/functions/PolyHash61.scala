@@ -1,17 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.SparkException
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[PolyHash61]]'s eval and generated code — a
-  * standalone object so the static forwarder `PolyHash61Impl.hash(byte[])`
-  * is directly callable from janino-generated Java.
+/** The kernel behind [[PolyHash61]]: a standalone object, so its static
+  * forwarder `PolyHash61Impl.hash` is directly callable from generated Java.
   */
 object PolyHash61Impl {
 
@@ -94,6 +88,8 @@ object PolyHash61Impl {
     acc ^= acc >>> 31
     if (acc >= Mod61) acc - Mod61 else acc
   }
+
+  def hash(s: UTF8String): Long = hash(s.getBytes)
 }
 
 /** Native codegen'd 61-bit avalanching string hash:
@@ -112,44 +108,12 @@ object PolyHash61Impl {
   * fits; the result casts back to BIGINT) and replays the finalizer with
   * `xor`/`>>`/HUGEINT-multiply/`%`.
   */
-case class PolyHash61(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"poly_hash61 requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    PolyHash61Impl.hash(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PolyHash61Impl.hash($a.getBytes());")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PolyHash61 {
 
   /** DSL entry: `polyHash61(s)` as a Column. */
   def polyHash61(s: Column): Column =
-    GraftColumnBridge.column(PolyHash61(GraftColumnBridge.expression(s)))
-
-  private val info = new ExpressionInfo(classOf[PolyHash61].getName, "poly_hash61")
-  private val builder = (exprs: Seq[Expression]) => {
-    if (exprs.length != 1) {
-      throw new SparkException("poly_hash61 takes exactly 1 argument")
+    Kernel.call("poly_hash61", PolyHash61Impl, "hash", LongType, Seq(s)) {
+      case Seq(StringType) => Right(Nil)
+      case Seq(other) => Left(s"poly_hash61 requires a string input, got ${other.catalogString}")
     }
-    PolyHash61(exprs.head)
-  }
-
-  /** SQL registration for an existing session: `SELECT poly_hash61(s)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("poly_hash61"), info, builder)
 }

@@ -1,19 +1,26 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** Shared implementation for [[PqEncodeCodes]]'s eval and generated code —
-  * the [[GreedyEncodeImpl]] pattern (standalone object, directly callable
-  * from janino-generated Java).
+/** Native PQ encode kernel: `pq_encode_codes(vn, cb)` -> the vector's m
+  * codes as `array<struct<sub:int, cid:bigint>>` ascending by sub — the
+  * gathered shape the fused ADC scan consumes, computed entirely
+  * row-locally.
+  *
+  * Why native: the rows formulation explodes each vector into m subspace
+  * rows, broadcast-joins them against K codewords (materializing
+  * N x m x K scored rows) and shuffles an argmin aggregate; a
+  * higher-order-function fold avoids the fan-out but evaluates
+  * interpreted, one lambda frame per (codeword x element) — measured
+  * SLOWER than the rows plan at x10 scale. This loop runs the identical
+  * flops inside whole-stage codegen with zero row fan-out and zero
+  * encode exchange. SimilaritySearchSpec pins kernel == rows bit parity
+  * on the real corpus and on trained codebooks.
   */
-object PqEncodeCodesImpl {
+object PqEncodeCodes {
 
   /** All `m` PQ codes of one UNIT vector in one pass: for each subspace
     * `s`, the codeword minimizing `svv + cvv - 2*dot(sv, cv)` with ties
@@ -96,67 +103,29 @@ object PqEncodeCodesImpl {
     }
     new GenericArrayData(out)
   }
-}
 
-/** Native PQ encode kernel: `pq_encode_codes(vn, cb)` -> the vector's m
-  * codes as `array<struct<sub:int, cid:bigint>>` ascending by sub — the
-  * gathered shape the fused ADC scan consumes, computed entirely
-  * row-locally.
-  *
-  * Why native: the rows formulation explodes each vector into m subspace
-  * rows, broadcast-joins them against K codewords (materializing
-  * N x m x K scored rows) and shuffles an argmin aggregate; a
-  * higher-order-function fold avoids the fan-out but evaluates
-  * interpreted, one lambda frame per (codeword x element) — measured
-  * SLOWER than the rows plan at x10 scale. This loop runs the identical
-  * flops inside whole-stage codegen with zero row fan-out and zero
-  * encode exchange. SimilaritySearchSpec pins kernel == rows bit parity
-  * on the real corpus and on trained codebooks.
-  */
-case class PqEncodeCodes(left: Expression, right: Expression, m: Int)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("sub", IntegerType, nullable = false),
-      StructField("cid", LongType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(s: StructType, _))
+  def pqEncodeCodes(vn: Column, cb: Column, m: Int): Column =
+    Kernel.call("pq_encode_codes", this, "encode", ArrayType(
+      StructType(Seq(
+        StructField("sub", IntegerType, nullable = false),
+        StructField("cid", LongType, nullable = false))),
+      containsNull = false), Seq(vn, cb)) {
+      case Seq(ArrayType(DoubleType, _), ArrayType(s: StructType, _))
         if s.length == 4 && s(0).dataType == IntegerType &&
           s(1).dataType == LongType &&
           s(2).dataType == ArrayType(DoubleType, containsNull = false) &&
           s(3).dataType == DoubleType =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(DoubleType, _), ArrayType(s: StructType, _))
+        Right(Seq(m))
+      case Seq(ArrayType(DoubleType, _), ArrayType(s: StructType, _))
         if s.length == 4 && s(0).dataType == IntegerType &&
           s(1).dataType == LongType &&
           s(2).dataType.isInstanceOf[ArrayType] &&
           s(2).dataType.asInstanceOf[ArrayType].elementType == DoubleType &&
           s(3).dataType == DoubleType =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        Right(Seq(m))
+      case Seq(l, r) => Left(
         "pq_encode_codes requires (array<double>, array<struct<sub: int, " +
           s"cid: bigint, cv: array<double>, cvv: double>>), got " +
           s"(${l.catalogString}, ${r.catalogString})")
     }
-
-  override def nullSafeEval(vn: Any, cb: Any): Any =
-    PqEncodeCodesImpl.encode(
-      vn.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData], m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, c) =>
-      s"${ev.value} = graft.functions.PqEncodeCodesImpl.encode($v, $c, $m);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqEncodeCodes {
-  def pqEncodeCodes(vn: Column, cb: Column, m: Int): Column =
-    GraftColumnBridge.column(PqEncodeCodes(
-      GraftColumnBridge.expression(vn), GraftColumnBridge.expression(cb), m))
 }

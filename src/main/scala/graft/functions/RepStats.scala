@@ -1,22 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-row repetition-counting kernel shared by eval and generated code:
-  * line duplication counts and the most-frequent word bigram, in one pass
-  * with hash maps — replacing the interpreted HOF folds whose lambda-frame
-  * overhead made q52 the slowest scan in the suite even after let-binding
-  * (each fold step is an interpreted expression tree; this is a tight
-  * JIT'd loop).
+/** Native one-pass repetition statistics: struct(n_lines, nd_lines,
+  * line_chars, dup_line_chars, best_cnt, best_len) — the counting
+  * substrate of the within-doc repetition metrics (q52). The ratio
+  * arithmetic stays in Column math downstream, so outputs are
+  * bit-identical to the HOF witness ([[TextFunctions
+  * .repetitionMetricsHof]], pinned by RepetitionMetricsSpec).
+  *
+  * The kernel: line duplication counts and the most-frequent word bigram,
+  * in one pass with hash maps — replacing the interpreted HOF folds whose
+  * lambda-frame overhead made q52 the slowest scan in the suite even after
+  * let-binding (each fold step is an interpreted expression tree; this is
+  * a tight JIT'd loop).
   */
-class RepStatsImpl extends Serializable {
+object RepStats {
 
   /** Spark's `trim` semantics: strip U+0020 SPACE only (Java's
     * String.trim strips all control chars <= 0x20 — NOT the same).
@@ -85,46 +88,14 @@ class RepStatsImpl extends Serializable {
       nLines, lineCounts.size().toLong, lineChars, dupLineChars,
       bestCnt, bestGram.length.toLong))
   }
-}
-
-/** Native one-pass repetition statistics: struct(n_lines, nd_lines,
-  * line_chars, dup_line_chars, best_cnt, best_len) — the counting
-  * substrate of the within-doc repetition metrics (q52). The ratio
-  * arithmetic stays in Column math downstream, so outputs are
-  * bit-identical to the HOF witness ([[TextFunctions
-  * .repetitionMetricsHof]], pinned by RepetitionMetricsSpec).
-  */
-case class RepStats(child: Expression) extends UnaryExpression {
-
-  private val impl = new RepStatsImpl
-
-  override def dataType: DataType = RepStats.schema
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"rep_stats requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    impl.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("repStatsImpl", impl, classOf[RepStatsImpl].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.eval($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object RepStats {
 
   val schema: StructType = StructType(
     Seq("n_lines", "nd_lines", "line_chars", "dup_line_chars",
       "best_cnt", "best_len").map(StructField(_, LongType, nullable = false)))
 
   def repStats(text: Column): Column =
-    GraftColumnBridge.column(RepStats(GraftColumnBridge.expression(text)))
+    Kernel.call("rep_stats", this, "eval", schema, Seq(text)) {
+      case Seq(StringType) => Right(Nil)
+      case Seq(other) => Left(s"rep_stats requires a string input, got ${other.catalogString}")
+    }
 }

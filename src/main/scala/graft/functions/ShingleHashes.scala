@@ -1,18 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[ShingleHashes]] — standalone object so the
-  * static forwarder is callable from generated code.
+/** Native codegen'd `shingle_hashes(text, n)`: distinct polynomial hashes of
+  * a document's word n-gram shingles as `array<long>`, sorted ascending.
+  *
+  * Replaces the composed HOF pipeline (`array_distinct(transform(
+  * wordShingles(tokens(text), n), polyHash))` — see
+  * [[TextFunctions.shingleHashesHof]]), which evaluates interpreted lambda
+  * frames per token and per shingle and materializes every shingle string.
+  * Round-2 probe at sf0.1: computing the shingle sets was 28-50s of the
+  * 29s q24 wall-clock — the joins built on top cost ~5s.
   */
-object ShingleHashesImpl {
+object ShingleHashes {
 
   /** text -> distinct rolling-hash values of its word n-gram shingles,
     * sorted ascending. One pass, no intermediate strings:
@@ -67,42 +70,11 @@ object ShingleHashesImpl {
     java.util.Arrays.sort(out)
     new GenericArrayData(out)
   }
-}
 
-/** Native codegen'd `shingle_hashes(text, n)`: distinct polynomial hashes of
-  * a document's word n-gram shingles as `array<long>`, sorted ascending.
-  *
-  * Replaces the composed HOF pipeline (`array_distinct(transform(
-  * wordShingles(tokens(text), n), polyHash))` — see
-  * [[TextFunctions.shingleHashesHof]]), which evaluates interpreted lambda
-  * frames per token and per shingle and materializes every shingle string.
-  * Round-2 probe at sf0.1: computing the shingle sets was 28-50s of the
-  * 29s q24 wall-clock — the joins built on top cost ~5s.
-  */
-case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType if n >= 1 => TypeCheckResult.TypeCheckSuccess
-      case StringType => TypeCheckResult.TypeCheckFailure(s"shingle width must be >= 1, got $n")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"shingle_hashes requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashesImpl.eval(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.ShingleHashesImpl.eval($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ShingleHashes {
   def shingleHashes(text: Column, n: Int): Column =
-    GraftColumnBridge.column(ShingleHashes(GraftColumnBridge.expression(text), n))
+    Kernel.call("shingle_hashes", this, "eval", ArrayType(LongType, containsNull = false), Seq(text)) {
+      case Seq(StringType) if n >= 1 => Right(Seq(n))
+      case Seq(StringType) => Left(s"shingle width must be >= 1, got $n")
+      case Seq(other) => Left(s"shingle_hashes requires a string input, got ${other.catalogString}")
+    }
 }

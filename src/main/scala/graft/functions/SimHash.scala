@@ -1,17 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[SimHash]] — standalone object so the static
-  * forwarder is callable from generated code.
+/** Native codegen'd `simhash(text)`: the document's 30-bit SimHash computed
+  * entirely row-local — map-side, inside whole-stage codegen, NO shuffle.
+  *
+  * The aggregation formulation this replaces
+  * ([[graft.operators.Dedup.simhashViaAggregation]]) explodes tokens and
+  * then 30 bit rows per (doc, token) — two wide shuffles whose volume is
+  * 30x the token count. At 100 TB that is the difference between a
+  * map-only signature stage and shuffling multiples of the corpus; the
+  * only shuffle left in simhash dedup is the banded candidate join.
   */
-object SimHashImpl {
+object SimHash {
 
   /** text -> 30-bit SimHash, or null (boxed) when the text has no tokens.
     *
@@ -20,13 +23,13 @@ object SimHashImpl {
     * final hash sets bit b iff its sum is positive. Summing per occurrence
     * is identical to the frequency-weighted form (sum over distinct tokens
     * of count * sign): addition is associative. Tokenization matches
-    * [[ShingleHashesImpl]] exactly (lowercase, maximal ASCII [a-z0-9] runs).
+    * [[ShingleHashes.eval]] exactly (lowercase, maximal ASCII [a-z0-9] runs).
     *
     * Token-less text returns null so callers can drop those docs — the
     * aggregation formulation never emits a row for them (explode of an
     * empty token array), and the two must agree.
     */
-  def eval(s: UTF8String, bits: Int): Any = {
+  def eval(s: UTF8String, bits: Int): java.lang.Long = {
     val bytes = s.toLowerCase.getBytes
     val sums = new Array[Long](bits)
     var sawToken = false
@@ -53,54 +56,11 @@ object SimHashImpl {
     }
     java.lang.Long.valueOf(out)
   }
-}
 
-/** Native codegen'd `simhash(text)`: the document's 30-bit SimHash computed
-  * entirely row-local — map-side, inside whole-stage codegen, NO shuffle.
-  *
-  * The aggregation formulation this replaces
-  * ([[graft.operators.Dedup.simhashViaAggregation]]) explodes tokens and
-  * then 30 bit rows per (doc, token) — two wide shuffles whose volume is
-  * 30x the token count. At 100 TB that is the difference between a
-  * map-only signature stage and shuffling multiples of the corpus; the
-  * only shuffle left in simhash dedup is the banded candidate join.
-  */
-case class SimHash(child: Expression, bits: Int = TextFunctions.SimhashBits)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullable: Boolean = true // token-less text -> null
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType if bits >= 1 && bits <= 62 => TypeCheckResult.TypeCheckSuccess
-      case StringType => TypeCheckResult.TypeCheckFailure(s"bits must be in [1, 62], got $bits")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"simhash requires a string input, got ${other.catalogString}")
+  def simhash(text: Column, bits: Int = TextFunctions.SimhashBits): Column =
+    Kernel.call("simhash", this, "eval", LongType, Seq(text), nullResult = true) {
+      case Seq(StringType) if bits >= 1 && bits <= 62 => Right(Seq(bits))
+      case Seq(StringType) => Left(s"bits must be in [1, 62], got $bits")
+      case Seq(other) => Left(s"simhash requires a string input, got ${other.catalogString}")
     }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashImpl.eval(input.asInstanceOf[UTF8String], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |Object $boxed = graft.functions.SimHashImpl.eval($a, $bits);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ((java.lang.Long) $boxed).longValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimHash {
-  def simhash(text: Column): Column =
-    GraftColumnBridge.column(SimHash(GraftColumnBridge.expression(text)))
 }

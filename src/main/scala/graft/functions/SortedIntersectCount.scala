@@ -1,17 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Shared implementation for [[SortedIntersectCount]] — standalone object so
-  * the static forwarder is callable from generated code.
+/** Native codegen'd `sorted_intersect_count(a, b)`: the size of the
+  * intersection of two sorted distinct `array<long>` sets.
+  *
+  * PRECONDITION (not checked — a check would cost the scan the kernel
+  * saves): both inputs sorted ascending and distinct. [[ShingleHashes]]
+  * emits exactly that; SortedIntersectCountSpec pins the parity against
+  * `size(array_intersect(a, b))` on sorted inputs.
+  *
+  * This is the verify-join kernel for the near-dup operators: the Jaccard
+  * check runs once per candidate pair, and with the interpreted
+  * `array_intersect` the per-pair cost (hash set build + output array) was
+  * the dominant term of the verify stage.
   */
-object SortedIntersectCountImpl {
+object SortedIntersectCount {
 
   /** |a ∩ b| by a single linear merge over two ASCENDING-sorted distinct
     * long arrays. O(|a| + |b|), zero allocation — vs `array_intersect`,
@@ -33,49 +39,12 @@ object SortedIntersectCountImpl {
     }
     c
   }
-}
 
-/** Native codegen'd `sorted_intersect_count(a, b)`: the size of the
-  * intersection of two sorted distinct `array<long>` sets.
-  *
-  * PRECONDITION (not checked — a check would cost the scan the kernel
-  * saves): both inputs sorted ascending and distinct. [[ShingleHashes]]
-  * emits exactly that; SortedIntersectCountSpec pins the parity against
-  * `size(array_intersect(a, b))` on sorted inputs.
-  *
-  * This is the verify-join kernel for the near-dup operators: the Jaccard
-  * check runs once per candidate pair, and with the interpreted
-  * `array_intersect` the per-pair cost (hash set build + output array) was
-  * the dominant term of the verify stage.
-  */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect_count requires two array<bigint> inputs, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCountImpl.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SortedIntersectCountImpl.eval($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectCount {
   def sortedIntersectCount(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      SortedIntersectCount(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    Kernel.call("sorted_intersect_count", this, "eval", LongType, Seq(a, b)) {
+      case Seq(ArrayType(LongType, _), ArrayType(LongType, _)) => Right(Nil)
+      case Seq(l, r) => Left(
+        s"sorted_intersect_count requires two array<bigint> inputs, got " +
+          s"${l.catalogString} and ${r.catalogString}")
+    }
 }

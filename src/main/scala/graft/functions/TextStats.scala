@@ -1,30 +1,36 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-row token-count kernel shared by eval and generated code. One
-  * instance per expression (holds the prepared stopword / marker lookup
-  * sets); referenced from codegen via `addReferenceObj`.
+/** Native one-pass token statistics: struct(n_tokens, n_distinct, sum_len,
+  * est_subwords, n_stop, s_<lang>...) — the counting substrate of the
+  * quality metrics (q20) and language-ID (q21) queries.
+  *
+  * The composed pipeline re-tokenizes per metric and evaluates interpreted
+  * lambda frames per token (`aggregate` for lengths/subwords, `filter` per
+  * stopword/marker list); this computes every count in a single scan of
+  * the text. The ratio/score arithmetic stays in Column math downstream, so
+  * outputs are bit-identical to the HOF forms (witness: TextStatsSpec).
+  *
+  * The kernel holds only read-only lookup sets, built once from the
+  * [[TextFunctions]] constants and shared by every thread.
   */
-class TextStatsImpl(stopwords: Array[String], markerSets: Array[Array[String]])
-    extends Serializable {
+object TextStats {
 
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
+  private val stopSet: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
-    stopwords.foreach(s.add)
+    TextFunctions.Stopwords.foreach(s.add)
     s
   }
-  @transient private lazy val markers: Array[java.util.HashSet[String]] =
-    markerSets.map { ws => val s = new java.util.HashSet[String](); ws.foreach(s.add); s }
+  private val markers: Array[java.util.HashSet[String]] =
+    TextFunctions.LangMarkers.map { case (_, ws) =>
+      val s = new java.util.HashSet[String](); ws.foreach(s.add); s }.toArray
 
-  /** Tokenize (identical to [[ShingleHashesImpl]]: UTF8String.toLowerCase,
+  /** Tokenize (identical to [[ShingleHashes.eval]]: UTF8String.toLowerCase,
     * maximal ASCII [a-z0-9] runs) and count everything the composed HOF
     * pipeline counts, in one pass: n_tokens, n_distinct, sum of token
     * lengths, BPE-ish subword estimate (ceil(len/4) per token), stopword
@@ -62,46 +68,6 @@ class TextStatsImpl(stopwords: Array[String], markerSets: Array[Array[String]])
     while (m < markers.length) { out(5 + m) = langHits(m); m += 1 }
     new GenericInternalRow(out)
   }
-}
-
-/** Native one-pass token statistics: struct(n_tokens, n_distinct, sum_len,
-  * est_subwords, n_stop, s_<lang>...) — the counting substrate of the
-  * quality metrics (q20) and language-ID (q21) queries.
-  *
-  * The composed pipeline re-tokenizes per metric and evaluates interpreted
-  * lambda frames per token (`aggregate` for lengths/subwords, `filter` per
-  * stopword/marker list); this computes every count in a single scan of
-  * the text. The ratio/score arithmetic stays in Column math downstream, so
-  * outputs are bit-identical to the HOF forms (witness: TextStatsSpec).
-  */
-case class TextStats(child: Expression) extends UnaryExpression {
-
-  private val impl = new TextStatsImpl(
-    TextFunctions.Stopwords.toArray,
-    TextFunctions.LangMarkers.map(_._2.toArray).toArray)
-
-  override def dataType: DataType = TextStats.schema
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"text_stats requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    impl.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("textStatsImpl", impl, classOf[TextStatsImpl].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.eval($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TextStats {
 
   /** Fixed output schema: count fields then one `s_<lang>` per marker
     * language, in [[TextFunctions.LangMarkers]] order.
@@ -114,5 +80,8 @@ object TextStats {
       })
 
   def textStats(text: Column): Column =
-    GraftColumnBridge.column(TextStats(GraftColumnBridge.expression(text)))
+    Kernel.call("text_stats", this, "eval", schema, Seq(text)) {
+      case Seq(StringType) => Right(Nil)
+      case Seq(other) => Left(s"text_stats requires a string input, got ${other.catalogString}")
+    }
 }

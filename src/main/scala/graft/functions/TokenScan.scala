@@ -6,7 +6,7 @@ package graft.functions
   * empties filtered (multi-byte characters never match [a-z0-9], so they
   * delimit like punctuation).
   *
-  * [[ShingleHashesImpl]], [[SimHashImpl]], and [[TextStatsImpl]] all fold
+  * [[ShingleHashes.eval]], [[SimHash.eval]], and [[TextStats.eval]] all fold
   * over these runs; the q20-q26 oracle parity rests on them agreeing, so
   * the scan lives here exactly once. The callback style keeps the loop
   * allocation-free and JIT-inlinable.

@@ -1,62 +1,34 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Native Catalyst dot product over `array<float>` / `array<double>`:
+/** Native dot product over `array<float>` / `array<double>`:
   * `vec_dot(a, b) = sum_i a_i * b_i` accumulated in double, in index order.
   *
   * This is the codegen'd fast path for the similarity operators: Spark's
   * higher-order functions (`zip_with` + `aggregate`) evaluate interpreted,
   * one lambda frame per element — on a 2M-pair near-dup join at 64 dims
-  * that's ~256M interpreted calls. `doGenCode` here emits a tight primitive
-  * loop inside whole-stage codegen instead.
+  * that's ~256M interpreted calls. [[dot]] is a tight primitive loop
+  * called from whole-stage codegen instead.
   *
   * Arithmetic parity: float elements are widened to double and summed left
   * to right — bit-identical to the `toDoubleVec` + `zip_with`/`aggregate`
   * fold in [[VectorFunctions]] and to the DuckDB oracle's `list_reduce`, so
   * swapping this in cannot change any query result.
   */
-case class VecDotProduct(left: Expression, right: Expression) extends BinaryExpression {
+object VecDotProduct {
 
-  override def dataType: DataType = DoubleType
-
-  private def elemType(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemType(left.dataType), elemType(right.dataType)) match {
-      case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"vec_dot requires array<float> or array<double> inputs, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-    }
-
-  private def isFloat(e: Expression): Boolean =
-    elemType(e.dataType).contains(FloatType)
-
-  // Mismatched-length inputs yield NULL (malformed embedding, not a silent
-  // truncated product) — matching the DuckDB oracle twin, whose fold indexes
-  // past the shorter list and folds in NULL.
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** The kernel: `lf`/`rf` say which side holds floats (read in place, no
+    * widened copy of the array). Mismatched-length inputs yield NULL
+    * (malformed embedding, not a silent truncated product) — matching the
+    * DuckDB oracle twin, whose fold indexes past the shorter list and
+    * folds in NULL.
+    */
+  def dot(x: ArrayData, y: ArrayData, lf: Boolean, rf: Boolean): java.lang.Double = {
     if (x.numElements() != y.numElements()) return null
     val n = x.numElements()
-    val lf = isFloat(left)
-    val rf = isFloat(right)
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -68,37 +40,15 @@ case class VecDotProduct(left: Expression, right: Expression) extends BinaryExpr
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val getX = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getY = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final int $n = $a.numElements();
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += ($getX) * ($getY);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object VecDotProduct {
-
   /** DSL entry: `vecDot(a, b)` as a Column. */
   def vecDot(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      VecDotProduct(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    Kernel.call("vec_dot", this, "dot", DoubleType, Seq(a, b), nullResult = true) {
+      case Seq(ArrayType(l @ (FloatType | DoubleType), _), ArrayType(r @ (FloatType | DoubleType), _)) =>
+        Right(Seq(l == FloatType, r == FloatType))
+      case Seq(l, r) => Left(
+        s"vec_dot requires array<float> or array<double> inputs, got " +
+          s"${l.catalogString} and ${r.catalogString}")
+    }
 
   /** Codegen'd L2 norm: sqrt(vec_dot(v, v)) — same fold as the HOF norm. */
   def vecNorm(v: Column): Column =
@@ -110,26 +60,4 @@ object VecDotProduct {
     */
   def vecCosine(a: Column, b: Column): Column =
     vecDot(a, b) / (vecNorm(a) * vecNorm(b))
-
-  private val info = new ExpressionInfo(classOf[VecDotProduct].getName, "vec_dot")
-  private val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 2, "vec_dot takes exactly 2 arguments")
-    VecDotProduct(exprs(0), exprs(1))
-  }
-
-  /** SQL registration for an existing session: `SELECT vec_dot(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"), info, builder)
-}
-
-/** `SparkSessionExtensions` hook — enable with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDotProduct(exprs(0), exprs(1))))
 }

@@ -1,19 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared implementation for [[WinnowFingerprints]] — standalone object so
-  * the static forwarder is callable from generated code.
+/** Native codegen'd `winnow_fingerprints(text, k, w)`: the document's
+  * winnowing fingerprint set as `array<struct<h: long, pos: int>>` — the
+  * anchor substrate for exact-substring dedup ([[graft.operators.Dedup
+  * .substringPairs]]). One JIT'd pass per document (deque-based window
+  * minimum), no exploded per-position rows, no shuffle: the corpus-sized
+  * alternative — exploding every k-gram and windowing per doc — moves
+  * one row PER CHARACTER through an exchange; this moves ~2/(w+1) rows
+  * per character and only after row-local selection.
   */
-object WinnowImpl {
+object WinnowFingerprints {
 
   /** Position encoding base for the (hash, rightmost-pos) window minimum:
     * `key = h * PosM + (PosM - pos)` — minimizing the key minimizes the
@@ -103,56 +106,21 @@ object WinnowImpl {
         r.asInstanceOf[InternalRow].getInt(1)))
     new GenericArrayData(out)
   }
-}
-
-/** Native codegen'd `winnow_fingerprints(text, k, w)`: the document's
-  * winnowing fingerprint set as `array<struct<h: long, pos: int>>` — the
-  * anchor substrate for exact-substring dedup ([[graft.operators.Dedup
-  * .substringPairs]]). One JIT'd pass per document (deque-based window
-  * minimum), no exploded per-position rows, no shuffle: the corpus-sized
-  * alternative — exploding every k-gram and windowing per doc — moves
-  * one row PER CHARACTER through an exchange; this moves ~2/(w+1) rows
-  * per character and only after row-local selection.
-  */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = WinnowFingerprints.schema
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType if k >= 2 && w >= 2 =>
-        TypeCheckResult.TypeCheckSuccess
-      case org.apache.spark.sql.types.StringType =>
-        TypeCheckResult.TypeCheckFailure(
-          s"winnow_fingerprints needs k >= 2 and w >= 2, got k=$k w=$w")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"winnow_fingerprints requires a string input, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowImpl.eval(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.WinnowImpl.eval($a, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowFingerprints {
 
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("h", LongType, nullable = false),
     StructField("pos", IntegerType, nullable = false))), containsNull = false)
 
   def winnowFingerprints(text: Column, k: Int, w: Int): Column =
-    GraftColumnBridge.column(
-      WinnowFingerprints(GraftColumnBridge.expression(text), k, w))
+    Kernel.call("winnow_fingerprints", this, "eval", schema, Seq(text)) {
+      case Seq(StringType) if k >= 2 && w >= 2 => Right(Seq(k, w))
+      case Seq(StringType) => Left(s"winnow_fingerprints needs k >= 2 and w >= 2, got k=$k w=$w")
+      case Seq(other) => Left(
+        s"winnow_fingerprints requires a string input, got ${other.catalogString}")
+    }
 }
 
-/** Shared implementation for [[CommonExtent]]. */
+/** The kernels behind [[CommonExtent]]. */
 object CommonExtentImpl {
 
   /** Length of the maximal common substring running THROUGH the anchor
@@ -212,90 +180,36 @@ object CommonExtentImpl {
   }
 }
 
-/** Native codegen'd `common_extent(text_a, pos_a, text_b, pos_b)`: maximal
-  * shared-substring length through two anchor positions. The verify kernel
-  * of [[graft.operators.Dedup.substringPairs]]: `extent >= minLen` is
-  * exactly the offset-spine EXISTS the DuckDB twin replays (a shared run
-  * of length >= L through the anchor contains an aligned L-window keeping
-  * the anchor gram inside, and vice versa), at O(extent) per candidate
-  * instead of w window comparisons.
-  */
-case class CommonExtent(first: Expression, second: Expression,
-                        third: Expression, fourth: Expression, k: Int)
-    extends QuaternaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (org.apache.spark.sql.types.StringType, IntegerType,
-            org.apache.spark.sql.types.StringType, IntegerType) if k >= 1 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "common_extent requires (string, int, string, int) inputs and k >= 1, got " +
-          Seq(first, second, third, fourth).map(_.dataType.catalogString).mkString(", "))
-    }
-
-  override protected def nullSafeEval(a: Any, pa: Any, b: Any, pb: Any): Any =
-    CommonExtentImpl.eval(a.asInstanceOf[UTF8String], pa.asInstanceOf[Int],
-      b.asInstanceOf[UTF8String], pb.asInstanceOf[Int], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, pa, b, pb) =>
-      s"${ev.value} = graft.functions.CommonExtentImpl.eval($a, $pa, $b, $pb, $k);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-/** [[CommonExtent]] returning position AND length packed in one long:
-  * `(left << 32) | extent`, 0 on no match — the extent covers 1-based
-  * positions `[pos - left, pos - left + extent - 1]` in each text. One
-  * kernel pass serves both the span cut and the length filter; unpack
-  * with `span >> 32` / `span & 0xFFFFFFFF`.
-  */
-case class CommonExtentSpan(first: Expression, second: Expression,
-                            third: Expression, fourth: Expression, k: Int)
-    extends QuaternaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (org.apache.spark.sql.types.StringType, IntegerType,
-            org.apache.spark.sql.types.StringType, IntegerType) if k >= 1 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "common_extent_span requires (string, int, string, int) inputs and k >= 1, got " +
-          Seq(first, second, third, fourth).map(_.dataType.catalogString).mkString(", "))
-    }
-
-  override protected def nullSafeEval(a: Any, pa: Any, b: Any, pb: Any): Any =
-    CommonExtentImpl.evalSpan(a.asInstanceOf[UTF8String], pa.asInstanceOf[Int],
-      b.asInstanceOf[UTF8String], pb.asInstanceOf[Int], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, pa, b, pb) =>
-      s"${ev.value} = graft.functions.CommonExtentImpl.evalSpan($a, $pa, $b, $pb, $k);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
 object CommonExtent {
+
+  /** Native codegen'd `common_extent(text_a, pos_a, text_b, pos_b)`: maximal
+    * shared-substring length through two anchor positions. The verify kernel
+    * of [[graft.operators.Dedup.substringPairs]]: `extent >= minLen` is
+    * exactly the offset-spine EXISTS the DuckDB twin replays (a shared run
+    * of length >= L through the anchor contains an aligned L-window keeping
+    * the anchor gram inside, and vice versa), at O(extent) per candidate
+    * instead of w window comparisons.
+    */
   def commonExtent(textA: Column, posA: Column, textB: Column, posB: Column,
                    k: Int): Column =
-    GraftColumnBridge.column(CommonExtent(
-      GraftColumnBridge.expression(textA), GraftColumnBridge.expression(posA),
-      GraftColumnBridge.expression(textB), GraftColumnBridge.expression(posB), k))
+    call("common_extent", "eval", IntegerType, Seq(textA, posA, textB, posB), k)
 
+  /** [[commonExtent]] returning position AND length packed in one long:
+    * `(left << 32) | extent`, 0 on no match — the extent covers 1-based
+    * positions `[pos - left, pos - left + extent - 1]` in each text. One
+    * kernel pass serves both the span cut and the length filter; unpack
+    * with `span >> 32` / `span & 0xFFFFFFFF`.
+    */
   def commonExtentSpan(textA: Column, posA: Column, textB: Column, posB: Column,
                        k: Int): Column =
-    GraftColumnBridge.column(CommonExtentSpan(
-      GraftColumnBridge.expression(textA), GraftColumnBridge.expression(posA),
-      GraftColumnBridge.expression(textB), GraftColumnBridge.expression(posB), k))
+    call("common_extent_span", "evalSpan", LongType, Seq(textA, posA, textB, posB), k)
+
+  private def call(name: String, method: String, dataType: DataType, inputs: Seq[Column],
+                   k: Int): Column =
+    Kernel.call(name, CommonExtentImpl, method, dataType, inputs) {
+      case Seq(StringType, IntegerType, StringType, IntegerType) if k >= 1 => Right(Seq(k))
+      case types => Left(
+        s"$name requires (string, int, string, int) inputs and k >= 1, got " +
+          types.map(_.catalogString).mkString(", "))
+    }
 }

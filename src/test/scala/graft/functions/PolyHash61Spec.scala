@@ -60,7 +60,7 @@ class PolyHash61Spec extends SparkTestBase {
   test("NULL propagates; SQL registration works") {
     Seq(Option.empty[String]).toDF("s")
       .select(polyHash61(col("s"))).collect().head.isNullAt(0) shouldBe true
-    PolyHash61.register(spark)
+    SqlFunctions.registerAll(spark)
     spark.sql("SELECT poly_hash61('ab') AS h").as[Long].head() shouldBe ref("ab")
   }
 }

@@ -39,7 +39,7 @@ class PolyHashSpec extends SparkTestBase {
   }
 
   test("SQL registration works") {
-    PolyHash.register(spark)
+    SqlFunctions.registerAll(spark)
     sql("SELECT poly_hash('ab') AS h").head().getLong(0) shouldBe 12805L
   }
 

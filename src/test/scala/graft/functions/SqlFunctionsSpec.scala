@@ -54,6 +54,20 @@ class SqlFunctionsSpec extends SparkTestBase {
     an[Exception] should be thrownBy sql("SELECT vec_dot(array(1.0D))").collect()
     an[Exception] should be thrownBy
       sql("SELECT shingle_hashes(text, id) FROM (SELECT 'a' AS text, 2 AS id)").collect()
+    // a wrongly typed input fails analysis for every SQL name: no implicit
+    // cast turns it into a result
+    Seq("poly_hash(1)", "poly_hash61(1)", "vec_dot(array(1, 2), array(3, 4))",
+      "text_stats(array(1))", "rep_stats(1)", "minhash_signature(array('a'))",
+      "sorted_intersect_count(array('a'), array('b'))", "shingle_hashes(1, 2)",
+      "simhash(array(1))", "char_ngram_hash_buckets(1, 3, 64)", "redact_pii(array(1))")
+      .foreach { call =>
+        withClue(call) {
+          an[org.apache.spark.sql.AnalysisException] should be thrownBy
+            sql(s"SELECT $call").collect()
+        }
+      }
+    (the[org.apache.spark.sql.AnalysisException] thrownBy sql("SELECT poly_hash(1)"))
+      .getMessage should include("poly_hash requires a string input, got int")
   }
 
   test("redact_pii runs from SQL and matches the Column operator") {

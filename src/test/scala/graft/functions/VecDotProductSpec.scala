@@ -39,7 +39,7 @@ class VecDotProductSpec extends SparkTestBase {
     val withNull = df.select(vecDot(lit(null).cast("array<double>"), col("b")))
     withNull.head().isNullAt(0) shouldBe true
     // SQL surface
-    VecDotProduct.register(spark)
+    SqlFunctions.registerAll(spark)
     df.createOrReplaceTempView("vdp_t")
     sql("SELECT vec_dot(a, b) AS d FROM vdp_t").head().getDouble(0) shouldBe 11.0
   }
