@@ -18,33 +18,19 @@ import graft.operators.{AsOfJoin, BackfillPipeline, OnlineSyncPipeline, PointInT
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Event logs in the wild carry `ts` as TIMESTAMP(MICROS) or
-    * TIMESTAMP(NANOS); Spark 4 refuses the nanos variant outright unless
-    * the legacy conf reads it as a raw long. Set the conf for the footer
-    * read, then let [[graft.domain.Schemas.normalizeEventTs]] converge both
-    * encodings to TimestampType — it converts ONLY when `ts` arrived as a
-    * long (nanos), so a micros table passes through untouched. Hardcoding
-    * either encoding breaks when the dataset is regenerated with the other
-    * one (round 8: every events query crashed when ts flipped ns->us).
-    *
-    * The legacy conf is restored after the (eager) footer-schema read — the
-    * same try/finally pattern as BackfillPipeline.readEvents, so no session
-    * conf leaks into later queries; post-restore actions still decode nanos
-    * because the hadoop conf is captured into the relation at plan time.
+  /** A contract table, its schema read from one parquet footer on the
+    * driver ([[graft.sources.Fetcher.readParquet]]) — no inference job.
     */
-  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try graft.domain.Schemas.normalizeEventTs(t(s, dir, "events"))
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+    graft.sources.ProdFetcher.readParquet(s, s"$dir/$name.parquet")
+
+  /** The event table with `ts` normalized to TimestampType, read as the
+    * backfill reads its event log ([[BackfillPipeline.readEvents]]): the
+    * testdata has carried `ts` as TIMESTAMP(NANOS) and as TIMESTAMP(MICROS)
+    * across regenerations, so no encoding is hardcoded.
+    */
+  private[graft] def events(s: SparkSession, dir: String): DataFrame =
+    BackfillPipeline.readEvents(s, graft.sources.ProdFetcher, s"$dir/events.parquet")
 
   /** Per-run scratch tag for the I/O round-trip queries: two concurrent
     * driver runs (e.g. a verify racing a bench) must not stomp each other's

@@ -84,20 +84,16 @@ object BackfillPipeline {
           .as("event_type_counts"))
   }
 
-  /** Full pipeline: read events, transform, insert-overwrite the features
-    * table partitioned by day (reference: BackfillPipeline.scala:81-90).
-    */
   /** Read the raw event log with `ts` normalized to TimestampType. No
     * explicit schema on this read: event logs in the wild carry ts as
-    * TIMESTAMP(MICROS) or TIMESTAMP(NANOS); the legacy conf lets the nanos
-    * variant load (as a raw long), and normalizeEventTs converges both to
-    * TimestampType. Schemas.eventsRaw documents the logical contract.
-    * The conf is restored after the read — footer schema resolution happens
-    * eagerly inside readParquet and the hadoop conf is captured into the
-    * relation at plan time, so later actions on the returned frame still
-    * decode nanos correctly (verified empirically on TIMESTAMP(NANOS)
-    * parquet: plan with the conf set, unset it, then count — succeeds) and
-    * session-global state doesn't leak into later unrelated reads.
+    * TIMESTAMP(MICROS), TIMESTAMP_NTZ or TIMESTAMP(NANOS); the legacy conf
+    * lets the nanos variant load (as a raw long), and normalizeEventTs
+    * converges all three to TimestampType. Schemas.eventsRaw documents the
+    * logical contract. The schema comes from one driver-side footer read
+    * inside readParquet, so planning runs no job; the conf is restored
+    * after it, and later actions on the returned frame still decode nanos
+    * (ParquetFooterSchemaSpec reads all three encodings back), so no
+    * session-global state leaks into later unrelated reads.
     */
   private[graft] def readEvents(spark: SparkSession, fetcher: Fetcher, path: String): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
@@ -119,6 +115,9 @@ object BackfillPipeline {
     features
   }
 
+  /** Full pipeline: read events, transform, insert-overwrite the features
+    * table partitioned by day (reference: BackfillPipeline.scala:81-90).
+    */
   def run(spark: SparkSession, fetcher: Fetcher, writer: Writer,
       config: BackfillConfig): Dataset[FeaturesDaily] =
     runWith(spark, fetcher, config) { out =>
@@ -146,7 +145,7 @@ object BackfillPipeline {
       // A fresh table honors config.buckets so `--incremental --buckets N`
       // doesn't silently create an unbucketed table; an EXISTING table's
       // layout (bucketed or not) is preserved by the partition-level insert.
-      if (!spark.catalog.tableExists(config.outputTable) && config.buckets.isDefined)
+      if (config.buckets.isDefined && !spark.catalog.tableExists(config.outputTable))
         writer.insertOverwriteBucketedTable(
           out, config.outputTable, config.buckets.get, "user_id", config.partitionBy)
       else

@@ -1,6 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Read-side platform abstraction (reference: platform/Fetchers.scala:11-75).
@@ -38,12 +44,14 @@ trait Fetcher {
 
   /** Parquet scan (reference: Fetchers.scala:79-90). With an explicit schema
     * the scan starts instantly (no footer sampling) and column pruning /
-    * predicate pushdown still apply via the vectorized reader.
+    * predicate pushdown still apply via the vectorized reader. Without one,
+    * the schema Spark would infer is read from one footer on the driver
+    * ([[ParquetFooterSchema]]), so planning the scan still runs no job.
     */
   def readParquet(spark: SparkSession, path: String,
       schema: Option[StructType] = None): DataFrame = {
     val r = spark.read
-    schema.fold(r)(r.schema).parquet(path)
+    schema.orElse(ParquetFooterSchema(spark, path)).fold(r)(r.schema).parquet(path)
   }
 
   /** JSON scan (reference: Fetchers.scala:92-103). Schema strongly
@@ -111,6 +119,48 @@ trait Fetcher {
     WarehousePaths.resolve(spark, tableName).collect {
       case (fs, loc) if VersionedTable.isVersioned(fs, loc) => loc.toString
     }
+}
+
+/** The schema Spark's parquet source infers for a path without schema
+  * merging, read from one footer on the driver instead of by Spark's
+  * inference job (which reads the chosen footer inside a job even when it is
+  * one file). The file is the one Spark picks: a `_common_metadata`
+  * summary, else a `_metadata` summary, else the first data file in path
+  * order, hidden names skipped as Spark's listing skips them. The footer
+  * converts as Spark converts it: the Spark schema the writer recorded if
+  * any, else [[ParquetToSparkSchemaConverter]] under the session's parquet
+  * settings (`nanosAsLong` among them). None when the path holds no file;
+  * the read then reports the missing path or schema as Spark does.
+  */
+private[graft] object ParquetFooterSchema {
+
+  def apply(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.flatMap { c =>
+        val name = c.getPath.getName
+        if (!hidden(name) || name.startsWith("_metadata") || name.startsWith("_common_metadata"))
+          leaves(c)
+        else Nil
+      }
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap(leaves).sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map { st =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.NO_FILTER)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
 }
 
 /** Production fetcher — the trait defaults are already production-grade. */

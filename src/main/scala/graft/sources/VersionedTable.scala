@@ -7,9 +7,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** One committed snapshot of a versioned table.
   *
@@ -63,11 +65,17 @@ final case class TableManifest(
   *   latest, re-merges its entries, and retries at N+1. Concurrent
   *   incremental writers to different partitions therefore BOTH land, in
   *   some serial order, with neither's partitions lost.
-  * - **Read** resolves one manifest and only ever lists the data dirs that
-  *   manifest names: a reader planned against version N is unaffected by
-  *   any commit that happens while it runs (snapshot isolation), because
-  *   data dirs are immutable and never deleted until [[vacuum]] drops the
-  *   manifests that reference them.
+  * - **Read** resolves one manifest into one Spark file-source relation
+  *   whose file index ([[ManifestFileIndex]]) only ever lists the
+  *   partition dirs that manifest names: a reader planned against version
+  *   N is unaffected by any commit that happens while it runs (snapshot
+  *   isolation), because data dirs are immutable and never deleted until
+  *   [[vacuum]] drops the manifests that reference them.
+  * - **Catalog**: a table written through [[Writer]] is one EXTERNAL
+  *   datasource entry at the root ([[VersionedSource]]) that resolves the
+  *   latest manifest into the same relation, so `spark.table` and SQL see
+  *   the latest snapshot and a commit touches the catalog only when the
+  *   schema changes.
   * - **Time travel** = read any retained version by number.
   *
   * At 100 TB the log stays tiny (one small JSON per commit — partition
@@ -88,7 +96,6 @@ object VersionedTable {
 
   val LogDirName = "_graft_log"
   private val DataDirPrefix = "data-"
-  private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
   private val mapper = new ObjectMapper()
 
@@ -238,39 +245,45 @@ object VersionedTable {
     }
   }
 
-  /** Resolve a snapshot (latest by default) to a DataFrame. Only the data
-    * dirs the manifest names are listed; the result is aligned to the
-    * writer's schema (column order and types), so partition values read
-    * back with the exact types they were written with. Each dir is read
-    * with the schema the manifest recorded for it, so resolving a snapshot
-    * opens no parquet footer and runs no Spark job.
+  /** Resolve a snapshot (latest by default) to a DataFrame: one file
+    * scan over the files the manifest names ([[relation]]). Resolving opens
+    * no parquet footer, lists no data directory and runs no Spark job.
     */
   def read(spark: SparkSession, rootStr: String,
-      version: Option[Long] = None): DataFrame = {
+      version: Option[Long] = None): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, rootStr, version))
+
+  /** The snapshot as one Spark parquet relation over a [[ManifestFileIndex]]
+    * — the relation both [[read]] and the catalog entry
+    * ([[VersionedSource]]) resolve to. Its columns are the snapshot schema
+    * in the writer's order with the written types, every one nullable as
+    * Spark's file sources read them, so a dir written before an added
+    * column serves NULL for it (the commitPartitions contract).
+    */
+  private[sources] def relation(spark: SparkSession, rootStr: String,
+      version: Option[Long]): HadoopFsRelation = {
     val (fs, root) = fsRoot(spark, rootStr)
     val v = version.orElse(latestVersion(fs, root)).getOrElse(
       throw new NoSuchElementException(s"no committed version under $root"))
     val m = readManifest(fs, root, v)
-    val schema = m.schema
-    val raw =
-      if (m.partitionBy.isEmpty)
-        spark.read.schema(schema).parquet(new Path(root, m.entries("")).toString)
-      else if (m.entries.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else
-        m.entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, es) =>
-          val base = new Path(root, dir).toString
-          val branch = spark.read.schema(m.schemaOf(dir)).option("basePath", base)
-            .parquet(es.keys.toSeq.sorted.map(p => s"$base/$p"): _*)
-          // add-column evolution: a dir written before a column existed
-          // serves NULL for it (the commitPartitions contract)
-          val have = branch.columns.toSet
-          branch.select(schema.fields.toIndexedSeq.map(f =>
-            (if (have(f.name)) col(f.name) else lit(null).cast(f.dataType))
-              .as(f.name)): _*)
-        }.reduce(_.unionByName(_))
-    raw.select(schema.fields.toIndexedSeq.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*)
+    val index = new ManifestFileIndex(spark, fs, root, m)
+    HadoopFsRelation(index, index.partitionSchema, dataSchema(m),
+      bucketSpec = None, new ParquetFileFormat, Map.empty)(spark)
+  }
+
+  /** The snapshot schema with every field nullable, nested ones too: the
+    * data schema of the relation and the schema the catalog entry records.
+    */
+  private[sources] def dataSchema(m: TableManifest): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case mt: MapType =>
+        MapType(nullable(mt.keyType), nullable(mt.valueType), valueContainsNull = true)
+      case other => other
+    }
+    nullable(m.schema).asInstanceOf[StructType]
   }
 
   /** Drop all but the last `keepLast` versions and delete every data dir no
@@ -310,76 +323,6 @@ object VersionedTable {
     Option(fs.globStatus(new Path(logDir(root), ".tmp-*")))
       .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
       .foreach(st => if (st.getModificationTime < cutoff) fs.delete(st.getPath, false))
-  }
-
-  /** The snapshot as plain SQL over `parquet.` path tables — the text the
-    * catalog VIEW mirror is defined with, so `SELECT * FROM t` in any SQL
-    * client sees the committed snapshot without knowing about manifests.
-    * One branch per data dir, each restricted to the partitions that dir
-    * still serves; partition columns are cast to their written types (path
-    * inference would otherwise pick its own).
-    */
-  def snapshotSql(m: TableManifest, rootStr: String): String = {
-    val schema = m.schema
-    if (m.partitionBy.isEmpty) {
-      s"SELECT * FROM parquet.${quoteIdent(s"$rootStr/${m.entries("")}")}"
-    } else {
-      require(m.entries.nonEmpty, "empty partitioned snapshot has no SQL form")
-      m.entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, es) =>
-        // per-dir select list: a dir written before a column was added
-        // (commitPartitions' add-column evolution) serves typed NULL
-        val have = m.schemaOf(dir).fieldNames.toSet
-        val selectCols = schema.fields.map { f =>
-          if (!have.contains(f.name))
-            s"CAST(NULL AS ${f.dataType.sql}) AS ${quoteIdent(f.name)}"
-          else if (m.partitionBy.contains(f.name))
-            s"CAST(${quoteIdent(f.name)} AS ${f.dataType.sql}) AS ${quoteIdent(f.name)}"
-          else quoteIdent(f.name)
-        }.mkString(", ")
-        val pred = es.keys.toSeq.sorted
-          .map(rel => partitionPredicate(rel, m.partitionBy)).mkString(" OR ")
-        s"SELECT $selectCols FROM parquet.${quoteIdent(s"$rootStr/$dir")} WHERE $pred"
-      }.mkString("\nUNION ALL\n")
-    }
-  }
-
-  /** `p1=a/p2=b` → `(`p1` = 'a' AND `p2` = 'b')`; hive's null sentinel →
-    * `IS NULL`. String literals compare against inferred partition columns
-    * with Spark's usual implicit coercion (the outer CAST in the select
-    * list pins the output type).
-    */
-  private def partitionPredicate(relPath: String, partitionBy: Seq[String]): String = {
-    val parts = relPath.split('/').toSeq
-    require(parts.size == partitionBy.size && parts.zip(partitionBy).forall {
-      case (seg, c) => seg.startsWith(c + "=")
-    }, s"partition path '$relPath' does not match layout $partitionBy")
-    parts.map { seg =>
-      val Array(c, v) = seg.split("=", 2)
-      val value = unescapePathName(v)
-      if (value == HiveDefaultPartition) s"${quoteIdent(c)} IS NULL"
-      else s"${quoteIdent(c)} = '${value.replace("'", "''")}'"
-    }.mkString("(", " AND ", ")")
-  }
-
-  private def quoteIdent(s: String): String = "`" + s.replace("`", "``") + "`"
-
-  /** Decode hive path escaping (`%2F`-style). Malformed escapes pass
-    * through verbatim.
-    */
-  private[sources] def unescapePathName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length &&
-          Character.digit(s.charAt(i + 1), 16) >= 0 &&
-          Character.digit(s.charAt(i + 2), 16) >= 0) {
-        sb.append((Character.digit(s.charAt(i + 1), 16) * 16 +
-          Character.digit(s.charAt(i + 2), 16)).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   /** Result of a [[compact]] run: the committed version and the live

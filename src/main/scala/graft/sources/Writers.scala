@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType}
 
 /** Write-side platform abstraction (reference: platform/Writers.scala:27-110).
   *
@@ -10,6 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `partitionBy` drives directory/partition layout — the features table is
   * partitioned by `day` so freshness / as-of filters prune partitions at
   * scale (reference: ProdWriter.scala:57-70, BackfillPipelineConfig.scala:31).
+  *
+  * Catalog tables are [[VersionedTable]]s: [[insertOverwriteTable]],
+  * [[overwritePartitions]] and [[compactTable]] commit a manifest and keep
+  * the table's one catalog entry, an EXTERNAL datasource table at the root
+  * ([[VersionedSource]]), in step with it. Reading that entry from SQL
+  * needs graft's jar on the client's classpath. Only the bucketed write
+  * keeps a plain `saveAsTable` table.
   */
 trait Writer {
 
@@ -162,8 +171,9 @@ trait Writer {
     * manifest commit, so concurrent readers keep their snapshot, concurrent
     * writers serialize via compare-and-swap, and every retained version
     * stays readable ([[graft.sources.Fetcher.readTableVersion]]). The
-    * session catalog carries a VIEW mirror of the committed snapshot so
-    * plain `SELECT * FROM t` sees the same data without knowing about
+    * session catalog carries one datasource table at the root
+    * ([[VersionedSource]]) that resolves the latest manifest, so plain
+    * `SELECT * FROM t` sees the committed snapshot without knowing about
     * manifests.
     */
   def insertOverwriteTable(df: DataFrame, tableName: String,
@@ -172,7 +182,7 @@ trait Writer {
       case Some((fs, loc)) =>
         prepareVersionedRoot(df.sparkSession, fs, loc, tableName)
         VersionedTable.commitOverwrite(df, loc.toString, partitionBy)
-        syncCatalogMirror(df.sparkSession, tableName, fs, loc)
+        syncCatalogEntry(df.sparkSession, tableName, fs, loc)
       case None =>
         // unresolvable database: let saveAsTable report the standard error
         val w = df.write.mode("overwrite")
@@ -185,9 +195,10 @@ trait Writer {
     * commit log is either a pre-versioning legacy table or an orphan from a
     * lost metastore — move it aside (rename, not delete: insert-overwrite
     * replaces the DATA, but the old bytes stay recoverable for the
-    * retention window) and drop any legacy catalog TABLE entry so the VIEW
-    * mirror can take the name. Ordering matters: the aside-rename happens
-    * BEFORE the drop, so dropping a MANAGED legacy entry deletes nothing.
+    * retention window) and drop any legacy catalog TABLE entry so the
+    * versioned entry can take the name. Ordering matters: the aside-rename
+    * happens BEFORE the drop, so dropping a MANAGED legacy entry deletes
+    * nothing.
     */
   private def prepareVersionedRoot(spark: SparkSession, fs: FileSystem,
       loc: Path, tableName: String): Unit = {
@@ -200,34 +211,38 @@ trait Writer {
     }
   }
 
-  /** Re-point the catalog VIEW mirror at the LATEST committed snapshot.
-    * Re-reading the log here (rather than trusting the version this writer
-    * just committed) self-heals the mirror when two commits' view updates
-    * land out of order — both re-resolve to the same latest. Tables whose
-    * snapshot exceeds `spark.graft.catalogMirrorMaxPartitions` partitions
-    * skip the mirror (the view text enumerates partitions); manifest reads
-    * via [[Fetcher.readTable]] are exact at any size.
+  /** Keep the catalog entry of a versioned table in step with its log.
+    * The entry is an EXTERNAL datasource table ([[VersionedSource]]) at the
+    * root that resolves the latest manifest on every read, so a commit that
+    * keeps the schema writes no catalog metadata: it only drops this
+    * session's cached relation. The entry is (re-)registered when it is
+    * missing, is a legacy VIEW or table, or records another schema than
+    * the latest snapshot's. Re-reading the log here, rather than trusting
+    * the version this writer just committed, keeps two racing commits from
+    * leaving the older schema behind.
     */
-  private def syncCatalogMirror(spark: SparkSession, tableName: String,
+  private def syncCatalogEntry(spark: SparkSession, tableName: String,
       fs: FileSystem, loc: Path): Unit = {
     val latest = VersionedTable.latestVersion(fs, loc).getOrElse(return)
-    val m = VersionedTable.readManifest(fs, loc, latest)
-    val maxParts = spark.conf
-      .get("spark.graft.catalogMirrorMaxPartitions", "4096").toInt
-    if (m.partitionBy.nonEmpty && (m.entries.isEmpty || m.entries.size > maxParts)) {
-      // the PREVIOUS snapshot's view must not survive the skip: a stale
-      // view silently serves pre-overwrite rows now and broken paths after
-      // a vacuum — drop it so SQL readers fail loudly toward readTable
-      if (spark.catalog.tableExists(tableName) &&
-          spark.catalog.getTable(tableName).tableType == "VIEW")
-        spark.sql(s"DROP VIEW ${WarehousePaths.quote(tableName)}")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"catalog mirror for $tableName skipped (${m.entries.size} partitions); " +
-          "read through Fetcher.readTable")
-    } else {
-      spark.sql(s"CREATE OR REPLACE VIEW ${WarehousePaths.quote(tableName)} AS " +
-        VersionedTable.snapshotSql(m, loc.toString))
+    val schema = VersionedTable.dataSchema(VersionedTable.readManifest(fs, loc, latest))
+    val catalog = spark.sessionState.catalog
+    val ident = WarehousePaths.identifier(spark, tableName)
+    val current = catalog.getTablesByName(Seq(ident)).headOption
+    if (!current.exists(t => t.provider.contains(VersionedSource.Name) && t.schema == schema)) {
+      current.foreach { t =>
+        if (t.tableType == CatalogTableType.VIEW)
+          spark.sql(s"DROP VIEW ${WarehousePaths.quote(tableName)}")
+        else if (t.tableType == CatalogTableType.MANAGED)
+          // dropping a managed entry deletes its location: the versioned root
+          throw new IllegalStateException(s"$tableName is a managed table over the " +
+            s"versioned root $loc; drop it by hand (its data is the table's log)")
+        else catalog.dropTable(ident, ignoreIfNotExists = true, purge = false)
+      }
+      catalog.createTable(CatalogTable(ident, CatalogTableType.EXTERNAL,
+        CatalogStorageFormat.empty.copy(locationUri = Some(loc.toUri)), schema,
+        provider = Some(VersionedSource.Name)), ignoreIfExists = true)
     }
+    catalog.refreshTable(ident)
   }
 
   /** Retention maintenance on a versioned table: keep the last `keepLast`
@@ -245,27 +260,26 @@ trait Writer {
   /** Small-file maintenance on a versioned table: rewrite the live
     * snapshot into one compacted data dir as a new version
     * ([[VersionedTable.compact]] — data bit-identical, prior versions
-    * still time-travelable until vacuum) and re-point the catalog mirror
-    * at it. Returns the compact stats, or None for non-versioned tables.
+    * still time-travelable until vacuum) and refresh the catalog entry.
+    * Returns the compact stats, or None for non-versioned tables.
     */
   def compactTable(spark: SparkSession, tableName: String,
       targetRecordsPerFile: Long = 1L << 20): Option[VersionedTable.CompactStats] =
     WarehousePaths.resolve(spark, tableName).flatMap { case (fs, loc) =>
       if (VersionedTable.isVersioned(fs, loc)) {
         val stats = VersionedTable.compact(spark, loc.toString, targetRecordsPerFile)
-        syncCatalogMirror(spark, tableName, fs, loc)
+        syncCatalogEntry(spark, tableName, fs, loc)
         Some(stats)
       } else None
     }
 
   /** Drop a table this writer manages: the versioned root (all snapshots)
-    * and the catalog entry (view or legacy table).
+    * and the catalog entry (versioned, view or legacy table).
     */
   def dropTable(spark: SparkSession, tableName: String): Unit = {
-    // Catalog entry goes FIRST: DROP VIEW uncaches by re-analyzing the
-    // view body, which reads the current snapshot's data dirs — deleting
-    // the data before the drop makes Spark log full PATH_NOT_FOUND /
-    // FileNotFound stacks (DropTableCommand + FileStreamSink, WARN with
+    // Catalog entry goes FIRST: DROP TABLE uncaches by resolving the
+    // table, which reads the latest manifest — deleting the root before
+    // the drop makes Spark log a full stack (DropTableCommand, WARN with
     // throwable) for a table that is being removed on purpose.
     if (spark.catalog.tableExists(tableName)) {
       val kind = if (spark.catalog.getTable(tableName).tableType == "VIEW") "VIEW" else "TABLE"
@@ -396,7 +410,7 @@ trait Writer {
     versionedLoc match {
       case Some((fs, loc)) =>
         VersionedTable.commitPartitions(df, loc.toString, partitionBy)
-        syncCatalogMirror(spark, tableName, fs, loc)
+        syncCatalogEntry(spark, tableName, fs, loc)
       case None if !spark.catalog.tableExists(tableName) =>
         insertOverwriteTable(df, tableName, partitionBy)
       case None =>
@@ -433,19 +447,28 @@ private[sources] object WarehousePaths {
     * table's data). None when the name doesn't resolve to an existing
     * database.
     */
-  def resolve(spark: SparkSession, tableName: String): Option[(FileSystem, Path)] = {
+  def resolve(spark: SparkSession, tableName: String): Option[(FileSystem, Path)] =
+    dbTable(spark, tableName).collect { case (db, tbl) if spark.catalog.databaseExists(db) =>
+      val loc = new Path(new Path(spark.catalog.getDatabase(db).locationUri), tbl.toLowerCase)
+      (loc.getFileSystem(spark.sparkContext.hadoopConfiguration), loc)
+    }
+
+  /** The catalog identifier of a table [[resolve]] locates. */
+  def identifier(spark: SparkSession, tableName: String): TableIdentifier = {
+    val (db, tbl) = dbTable(spark, tableName).getOrElse(
+      throw new IllegalArgumentException(s"not a table name: $tableName"))
+    TableIdentifier(tbl, Some(db))
+  }
+
+  private def dbTable(spark: SparkSession, tableName: String): Option[(String, String)] = {
     val parts = tableName.split('.').toSeq match {
       case "spark_catalog" +: rest => rest
       case other => other
     }
-    val dbTable = parts match {
+    parts match {
       case Seq(t) => Some((spark.catalog.currentDatabase, t))
       case Seq(d, t) => Some((d, t))
       case _ => None
-    }
-    dbTable.collect { case (db, tbl) if spark.catalog.databaseExists(db) =>
-      val loc = new Path(new Path(spark.catalog.getDatabase(db).locationUri), tbl.toLowerCase)
-      (loc.getFileSystem(spark.sparkContext.hadoopConfiguration), loc)
     }
   }
 

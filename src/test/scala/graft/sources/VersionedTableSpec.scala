@@ -12,7 +12,7 @@ import graft.SparkTestBase
 /** The transactional contract of manifest-versioned tables: atomic
   * insert-overwrite, snapshot-isolated reads during a concurrent overwrite,
   * CAS-serialized concurrent writers (full and per-partition), time travel,
-  * vacuum retention, the catalog VIEW mirror, and legacy-layout migration.
+  * vacuum retention, the catalog entry, and legacy-layout migration.
   */
 class VersionedTableSpec extends SparkTestBase {
   import spark.implicits._
@@ -25,6 +25,10 @@ class VersionedTableSpec extends SparkTestBase {
 
   private def days(rows: (Long, String, Long)*) =
     rows.toSeq.toDF("user_id", "day", "value")
+
+  private def catalogEntry(tbl: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl))
 
   test("overwrite commits replace the snapshot; every version stays readable") {
     val root = tmpRoot("ow")
@@ -303,13 +307,14 @@ class VersionedTableSpec extends SparkTestBase {
     try {
       ProdWriter.insertOverwriteTable(
         days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
-      // manifest read and plain-SQL view read agree
+      // manifest read and plain-SQL catalog read agree
       ProdFetcher.readTable(spark, tbl).as[(Long, String, Long)].collect().toSet shouldBe
         Set((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L))
       spark.sql(s"SELECT user_id, day, value FROM $tbl")
         .as[(Long, String, Long)].collect().toSet shouldBe
         Set((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L))
-      spark.catalog.getTable(tbl).tableType shouldBe "VIEW"
+      spark.catalog.getTable(tbl).tableType shouldBe "EXTERNAL"
+      catalogEntry(tbl).provider shouldBe Some(VersionedSource.Name)
 
       ProdWriter.overwritePartitions(days((9L, "2024-01-02", 9L)), tbl, Seq("day"))
       spark.sql(s"SELECT user_id, day, value FROM $tbl")
@@ -408,13 +413,15 @@ class VersionedTableSpec extends SparkTestBase {
       .select("user_id", "value", "extra")
       .as[(Long, Long, Option[String])].collect().toSet shouldBe
       Set((1L, 11L, Some("x1")), (2L, 20L, None), (3L, 30L, Some("x3")))
-    // the SQL mirror serves the same snapshot: typed NULL for the old dir
-    val m = VersionedTable.readManifest(fs(root), new Path(root),
-      VersionedTable.latestVersion(fs(root), new Path(root)).get)
-    spark.sql(VersionedTable.snapshotSql(m, root))
-      .select("user_id", "value", "extra")
-      .as[(Long, Long, Option[String])].collect().toSet shouldBe
-      Set((1L, 11L, Some("x1")), (2L, 20L, None), (3L, 30L, Some("x3")))
+    // a catalog entry over the root serves the same snapshot: typed NULL
+    // for the old dir
+    val tbl = "graft_vtspec_evolve"
+    try {
+      spark.sql(s"CREATE TABLE $tbl USING ${VersionedSource.Name} LOCATION '$root'")
+      spark.sql(s"SELECT user_id, value, extra FROM $tbl")
+        .as[(Long, Long, Option[String])].collect().toSet shouldBe
+        Set((1L, 11L, Some("x1")), (2L, 20L, None), (3L, 30L, Some("x3")))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // v2's manifest carries per-dir schemas (old dir narrower than snapshot)
     val m2 = VersionedTable.readManifest(fs(root), new Path(root), v2)
     m2.dirSchemas.values.map(s =>
@@ -502,7 +509,7 @@ class VersionedTableSpec extends SparkTestBase {
       m.schemaOf(m.entries(p)).fieldNames.toSeq shouldBe m.schema.fieldNames.toSeq)
     VersionedTable.read(spark, root).as[(Long, String, Long)].collect().toSet shouldBe
       Set((1L, "2024-01-01", 10L), (2L, "2024-01-02", 20L))
-    spark.sql(VersionedTable.snapshotSql(m, root)).count() shouldBe 2L
+    spark.read.format(VersionedSource.Name).load(root).count() shouldBe 2L
     // an add-column commit ON TOP of the legacy manifest starts tracking
     // per-dir schemas and still NULL-fills the legacy dir
     VersionedTable.commitPartitions(
@@ -530,5 +537,153 @@ class VersionedTableSpec extends SparkTestBase {
     // the table is untouched and a later compact still works
     VersionedTable.read(spark, root).count() shouldBe 1L
     VersionedTable.compact(spark, root).version shouldBe 2L
+  }
+
+  /** Names of the catalog events about table `tbl` that `body` posts. */
+  private def tableEvents(tbl: String)(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case t: org.apache.spark.sql.catalyst.catalog.TableEvent if t.name == tbl =>
+            seen.add(t.getClass.getSimpleName)
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.sql.GraftColumnBridge.waitForListeners(sc) }
+    finally sc.removeSparkListener(listener)
+    seen.toArray.toSeq.map(_.toString)
+  }
+
+  test("a commit that keeps the schema posts no catalog create, drop or alter event") {
+    val tbl = "graft_vtspec_events"
+    try {
+      ProdWriter.insertOverwriteTable(
+        days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
+      // the listener sees the first commit's registration, so it is live
+      tableEvents(tbl)(ProdWriter.dropTable(spark, tbl)) should not be empty
+      ProdWriter.insertOverwriteTable(
+        days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
+      tableEvents(tbl) {
+        ProdWriter.insertOverwriteTable(
+          days((3L, "2024-01-01", 3L), (4L, "2024-01-02", 4L)), tbl, Seq("day"))
+        ProdWriter.overwritePartitions(days((9L, "2024-01-02", 9L)), tbl, Seq("day"))
+      } shouldBe empty
+      spark.table(tbl).as[(Long, String, Long)].collect().toSet shouldBe
+        Set((3L, "2024-01-01", 3L), (9L, "2024-01-02", 9L))
+    } finally ProdWriter.dropTable(spark, tbl)
+  }
+
+  test("after each commit spark.table, SQL and a new session read what readTable reads") {
+    val tbl = "graft_vtspec_reads"
+    def agree(): Unit = {
+      val want = ProdFetcher.readTable(spark, tbl)
+      val rows = want.collect().toSet
+      spark.table(tbl).schema shouldBe want.schema
+      spark.table(tbl).collect().toSet shouldBe rows
+      spark.sql(s"SELECT * FROM $tbl").collect().toSet shouldBe rows
+      spark.newSession().table(tbl).collect().toSet shouldBe rows
+    }
+    try {
+      ProdWriter.insertOverwriteTable(
+        days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
+      agree()
+      ProdWriter.insertOverwriteTable(days((5L, "2024-01-05", 5L)), tbl, Seq("day"))
+      agree()
+      ProdWriter.overwritePartitions(
+        days((6L, "2024-01-06", 6L), (7L, "2024-01-05", 7L)), tbl, Seq("day"))
+      agree()
+      // an empty snapshot keeps its catalog entry
+      ProdWriter.insertOverwriteTable(days(), tbl, Seq("day"))
+      agree()
+      spark.table(tbl).count() shouldBe 0L
+      ProdWriter.overwritePartitions(
+        days((6L, "2024-01-06", 6L), (7L, "2024-01-05", 7L)), tbl, Seq("day"))
+      ProdWriter.compactTable(spark, tbl)
+      agree()
+      spark.table(tbl).count() shouldBe 2L
+    } finally ProdWriter.dropTable(spark, tbl)
+  }
+
+  test("a catalog DataFrame resolved before a commit keeps its snapshot") {
+    val tbl = "graft_vtspec_pinned"
+    try {
+      ProdWriter.insertOverwriteTable(
+        days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
+      val pinned = spark.table(tbl)
+      ProdWriter.overwritePartitions(days((9L, "2024-01-02", 9L)), tbl, Seq("day"))
+      ProdWriter.insertOverwriteTable(days((5L, "2024-01-05", 5L)), tbl, Seq("day"))
+      pinned.as[(Long, String, Long)].collect().toSet shouldBe
+        Set((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L))
+      spark.table(tbl).as[(Long, String, Long)].collect().toSet shouldBe
+        Set((5L, "2024-01-05", 5L))
+    } finally ProdWriter.dropTable(spark, tbl)
+  }
+
+  test("a catalog entry dropped by hand is registered again by the next commit") {
+    val tbl = "graft_vtspec_redrop"
+    try {
+      ProdWriter.insertOverwriteTable(
+        days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
+      spark.sql(s"DROP TABLE $tbl")
+      spark.catalog.tableExists(tbl) shouldBe false
+      ProdWriter.overwritePartitions(days((9L, "2024-01-02", 9L)), tbl, Seq("day"))
+      catalogEntry(tbl).provider shouldBe Some(VersionedSource.Name)
+      spark.table(tbl).as[(Long, String, Long)].collect().toSet shouldBe
+        Set((1L, "2024-01-01", 1L), (9L, "2024-01-02", 9L))
+    } finally ProdWriter.dropTable(spark, tbl)
+  }
+
+  test("an add-column commit widens the catalog entry's schema") {
+    val tbl = "graft_vtspec_widen"
+    try {
+      ProdWriter.insertOverwriteTable(
+        days((1L, "2024-01-01", 1L), (2L, "2024-01-02", 2L)), tbl, Seq("day"))
+      catalogEntry(tbl).schema.fieldNames.toSeq shouldBe Seq("user_id", "day", "value")
+      ProdWriter.overwritePartitions(
+        Seq((3L, "2024-01-03", 3L, "x3")).toDF("user_id", "day", "value", "extra"),
+        tbl, Seq("day"))
+      val entry = catalogEntry(tbl)
+      entry.provider shouldBe Some(VersionedSource.Name)
+      entry.schema.fieldNames.toSeq shouldBe Seq("user_id", "day", "value", "extra")
+      spark.sql(s"SELECT user_id, extra FROM $tbl")
+        .as[(Long, Option[String])].collect().toSet shouldBe
+        Set((1L, None), (2L, None), (3L, Some("x3")))
+    } finally ProdWriter.dropTable(spark, tbl)
+  }
+
+  test("readTable and the catalog entry read every column nullable, in the writer's order") {
+    val tbl = "graft_vtspec_nullable"
+    try {
+      // lit and range columns are non-nullable in the writer's schema
+      ProdWriter.insertOverwriteTable(spark.range(3).select(col("id").as("user_id"),
+        lit("2024-01-01").as("day"), lit(1L).as("value")), tbl, Seq("day"))
+      val want = org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id BIGINT, day STRING, value BIGINT")
+      ProdFetcher.readTable(spark, tbl).schema shouldBe want
+      spark.table(tbl).schema shouldBe want
+    } finally ProdWriter.dropTable(spark, tbl)
+  }
+
+  test("a day filter on readTable plans one scan of only the matching partitions") {
+    val tbl = "graft_vtspec_prune"
+    val feats = (1 to 30).map(d => (1L, java.sql.Date.valueOf(f"2024-01-$d%02d"), d.toLong))
+      .toDF("user_id", "day", "value")
+    try {
+      // a 30-day backfill, then an incremental run over its last 3 days: the
+      // snapshot spans two data dirs
+      ProdWriter.insertOverwriteTable(feats, tbl, Seq("day"))
+      ProdWriter.overwritePartitions(
+        feats.filter(col("day") >= to_date(lit("2024-01-28"))), tbl, Seq("day"))
+      val q = ProdFetcher.readTable(spark, tbl)
+        .filter(col("day") >= to_date(lit("2024-01-24")))
+      val scans = q.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      scans.map(_.selectedPartitions.partitionCount) shouldBe Seq(7)
+      q.select("value").as[Long].collect().sorted.toSeq shouldBe (24L to 30L)
+    } finally ProdWriter.dropTable(spark, tbl)
   }
 }
