@@ -202,7 +202,7 @@ trait Writer {
     */
   private def prepareVersionedRoot(spark: SparkSession, fs: FileSystem,
       loc: Path, tableName: String): Unit = {
-    sweepStaleAsides(spark, fs, loc)
+    sweepStaleAsides(fs, loc)
     if (!VersionedTable.isVersioned(fs, loc)) {
       if (fs.exists(loc)) moveAside(spark, fs, loc, tableName)
       if (spark.catalog.tableExists(tableName) &&
@@ -327,25 +327,27 @@ trait Writer {
     // once saveAsTable registers the table, tableExists is true forever in
     // a persistent metastore and a sweep gated behind it would never run
     WarehousePaths.resolve(spark, tableName).foreach { case (fs, loc) =>
-      sweepStaleAsides(spark, fs, loc)
+      sweepStaleAsides(fs, loc)
       if (!spark.catalog.tableExists(tableName) && fs.exists(loc))
         moveAside(spark, fs, loc, tableName)
     }
   }
 
+  /** How long an orphan aside survives: 7 days, long enough for an operator
+    * to notice the aside warning and recover data from a genuinely shared
+    * warehouse. */
+  private val OrphanAsideRetentionHours = 168L
+
   /** Asides are keyed by application id, so every distinct app run that hits
     * an orphaned location leaves one behind — unbounded warehouse growth
     * unless something reaps them. Reap here, on the next overwrite of the
-    * same table: delete `<table>.__orphan.*` siblings older than the
-    * retention window (`spark.graft.orphanAsideRetentionHours`, default 168
-    * = 7 days — long enough for an operator to notice the aside warning and
-    * recover data from a genuinely shared warehouse), and log what is
-    * retained so the pending garbage is visible, not silent.
+    * same table: delete `<table>.__orphan.*` siblings older than
+    * [[OrphanAsideRetentionHours]], and log what is retained so the pending
+    * garbage is visible, not silent.
     */
-  private def sweepStaleAsides(spark: SparkSession, fs: FileSystem, loc: Path): Unit = {
+  private def sweepStaleAsides(fs: FileSystem, loc: Path): Unit = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    val retentionMs = spark.conf
-      .get("spark.graft.orphanAsideRetentionHours", "168").toLong * 3600L * 1000L
+    val retentionMs = OrphanAsideRetentionHours * 3600L * 1000L
     val cutoff = System.currentTimeMillis() - retentionMs
     val asides =
       try fs.globStatus(new Path(loc.getParent, loc.getName + ".__orphan.*"))

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.sources.{KVClient, KVSink}
 
@@ -137,40 +137,35 @@ object EventStream {
 
   /** The ORACLE-GATED streaming contract (q186): run the real watermarked
     * ingest — [[dedupedEvents]] into [[windowedCounts]], Append mode —
-    * over the batch event table through MemoryStream micro-batches, and
-    * return the emitted windows as a batch frame the DuckDB twin can
-    * hash-match. Two batches drive the production semantics end to end:
+    * over the batch event table through [[replay]], and return the
+    * emitted windows as a batch frame the DuckDB twin can hash-match. The
+    * stream holds every event, then REPLAYED duplicates (each `event_id %
+    * replayMod == 0` row re-added — the at-least-once-source norm the
+    * dedup stage exists for), then the far-future sentinel whose
+    * watermark flushes every real window; the sentinel's own window stays
+    * in state and never emits.
     *
-    *  1. every event plus REPLAYED duplicates (each `event_id %
-    *     replayMod == 0` row re-added — the at-least-once-source norm the
-    *     dedup stage exists for);
-    *  2. one far-future sentinel that advances the event-time watermark
-    *     past every real window, so Append mode FLUSHES them all; the
-    *     sentinel's own window stays in state and never emits.
-    *
-    * Cross-engine discipline: `value` quantizes to 1e6 fixed point BEFORE
-    * the stream (floor(v·1e6 + 0.5), single IEEE ops — the q65 rule), so
-    * the windowed sum is exact BIGINT arithmetic, order- and
-    * engine-independent; a NULL value stays NULL (both engines' sums skip
-    * it). The dedup key is the FULL row (user, type, ts, value_fp) — a
-    * replay is a byte-identical redelivery — so the twin's DISTINCT is
-    * exact even if distinct events ever shared (user, type, ts). The
-    * result equals the batch formulation — distinct rows bucketed to
-    * tumbling windows — which is what the oracle SQL computes. The
-    * driver-side collect feeding MemoryStream is the harness contract of
-    * the in-memory source (a production job reads Kafka/files), not a
-    * pipeline pattern; windowLen/watermark must stay under the sentinel's
-    * 30-day horizon or the last real windows would never flush.
+    * Cross-engine discipline ([[quantizedEvents]]): the windowed sum is
+    * exact BIGINT arithmetic, order- and engine-independent; a NULL value
+    * stays NULL (both engines' sums skip it). The dedup key is the FULL
+    * row (user, type, ts, value_fp) — a replay is a byte-identical
+    * redelivery — so the twin's DISTINCT is exact even if distinct events
+    * ever shared (user, type, ts). The result equals the batch
+    * formulation — distinct rows bucketed to tumbling windows — which is
+    * what the oracle SQL computes. windowLen/watermark must stay under
+    * the sentinel's 30-day horizon or the last real windows would never
+    * flush.
     */
   def windowedIngestReplay(spark: org.apache.spark.sql.SparkSession,
                            events: DataFrame,
                            replayMod: Long = 97L,
                            windowLen: String = "1 hour",
                            watermark: String = "2 hours",
-                           statePartitions: Int = 4): DataFrame =
-    ingestReplayHarness(spark, "q186", events, Some(replayMod), statePartitions)(
-      stream => windowedCounts(
-        dedupedEvents(stream,
+                           statePartitions: Int = 4): DataFrame = {
+    val rows = quantizedEvents(spark, events, Some(replayMod))
+    replay(spark, "q186", statePartitions)(
+      windowedCounts(
+        dedupedEvents(eventStream(spark, rows),
           idCols = Seq("user_id", "event_type", "ts", "value"),
           watermark = watermark),
         windowLen, watermark),
@@ -178,55 +173,55 @@ object EventStream {
         unix_micros(col("window_start")).as("window_start_us"),
         col("user_id"), col("event_type"), col("n_events"),
         col("sum_value").as("sum_value_fp")))
+  }
 
   /** The SESSION-WINDOW streaming oracle contract (q187 —
     * [[windowedIngestReplay]]'s twin for the other stateful-window
     * family): run the real [[sessionStats]] (30-min-gap session windows,
-    * Append mode) over the batch event table through MemoryStream
-    * micro-batches plus the watermark-advancing sentinel, and return the
-    * emitted sessions as a batch frame. The DuckDB twin is the
-    * gaps-and-islands formulation (lag + running sum per user) with
-    * Spark's session semantics: an event exactly `gap` after its
-    * predecessor MERGES into the session (session_window treats the
-    * touching [ts+gap, …) start as part of the [ts, ts+gap] extent —
-    * verified empirically on Spark 4.1.2, batch and streaming; the
-    * break is strictly `> gap`, identical to q54's batch sessionizer),
-    * and session_end = last event + gap. No replayed duplicates
-    * here — ingest dedup is q186's contract; this one isolates session
-    * merge/flush. Same cross-engine discipline: `value` quantizes to 1e6
-    * fixed point BEFORE the stream so every output column is exact
-    * integer arithmetic.
+    * Append mode) over the batch event table plus the watermark-advancing
+    * sentinel through [[replay]], and return the emitted sessions as a
+    * batch frame. The DuckDB twin is the gaps-and-islands formulation
+    * (lag + running sum per user) with Spark's session semantics: an
+    * event exactly `gap` after its predecessor MERGES into the session
+    * (session_window treats the touching [ts+gap, …) start as part of the
+    * [ts, ts+gap] extent — verified empirically on Spark 4.1.2, batch and
+    * streaming; the break is strictly `> gap`, identical to q54's batch
+    * sessionizer), and session_end = last event + gap. No replayed
+    * duplicates here — ingest dedup is q186's contract; this one isolates
+    * session merge/flush. Every output column is exact integer
+    * arithmetic ([[quantizedEvents]]).
     */
   def sessionIngestReplay(spark: org.apache.spark.sql.SparkSession,
                           events: DataFrame,
                           gap: String = "30 minutes",
                           watermark: String = "2 hours",
-                          statePartitions: Int = 4): DataFrame =
-    ingestReplayHarness(spark, "q187", events, None, statePartitions)(
-      stream => sessionStats(stream, gap, watermark),
+                          statePartitions: Int = 4): DataFrame = {
+    val rows = quantizedEvents(spark, events, None)
+    replay(spark, "q187", statePartitions)(
+      sessionStats(eventStream(spark, rows), gap, watermark),
       sink => sink.select(
         unix_micros(col("session_start")).as("session_start_us"),
         unix_micros(col("session_end")).as("session_end_us"),
         col("user_id"), col("n_events"),
         col("sum_value").as("sum_value_fp")))
+  }
 
   /** The STREAM-STREAM INTERVAL JOIN oracle contract (q188 — the third
     * stateful family under the oracle after q186's windows and q187's
     * sessions): run the real [[attributedLabels]] join — every purchase
     * label against the SAME user's events in the `lookback` window
     * before it, both sides unbounded streams with watermarks — through
-    * TWO MemoryStreams, and return the attributed rows as a batch frame
-    * the DuckDB twin (a plain interval self-join) can hash-match.
+    * TWO MemoryStreams under [[replay]], and return the attributed rows
+    * as a batch frame the DuckDB twin (a plain interval self-join) can
+    * hash-match.
     *
     * Inner stream-stream joins emit each matched pair exactly once, when
     * the later side arrives — no watermark-gated flush holds rows back
-    * (watermarks only bound the join STATE here), but the harness still
-    * runs the shared quiescence barrier before reading the sink, and
-    * both sides get the far-future sentinel so state GC exercises the
-    * production path. The labels side is derived batch-side from the
-    * same event table (purchase rows), exactly like the batch
-    * point-in-time pipelines derive theirs; `value` quantizes to 1e6
-    * fixed point before the stream so every output column is exact.
+    * (watermarks only bound the join STATE here) — and both sides get the
+    * far-future sentinel so state GC exercises the production path. The
+    * labels side is derived batch-side from the same event table
+    * (purchase rows), exactly like the batch point-in-time pipelines
+    * derive theirs; every output column is exact ([[quantizedEvents]]).
     */
   def intervalJoinReplay(spark: org.apache.spark.sql.SparkSession,
                          events: DataFrame,
@@ -234,71 +229,28 @@ object EventStream {
                          watermark: String = "2 hours",
                          statePartitions: Int = 4): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    require(statePartitions >= 1, "statePartitions must be positive")
-    val timer = phaseTimer("q188")
-    val rows = events.select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"),
-        expr("CAST(floor(value * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)")
-          .as("value_fp"))
-      .as[(Long, String, Long, Option[Long])].collect()
-    timer("collect")
-    require(rows.nonEmpty, "streaming contract needs a non-empty event table")
-    val labelRows = rows.filter(_._2 == "purchase").map(r => (r._1, r._3, r._4))
-    val maxUs = rows.iterator.map(_._3).max
-    val eIn = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long, Option[Long])]
-    val lIn = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Option[Long])]
-    val eStream = eIn.toDF().toDF("user_id", "event_type", "us", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val lStream = lIn.toDF().toDF("user_id", "as_of_us", "label")
-      .withColumn("as_of_ts", timestamp_micros(col("as_of_us"))).drop("as_of_us")
-    val name = "graft_stream_q188_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        attributedLabels(eStream, lStream, lookback, watermark, watermark)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    timer("start")
-    try {
-      eIn.addData(rows.toSeq)
-      lIn.addData(labelRows.toSeq)
-      q.processAllAvailable()
-      timer("data_batch")
-      val sentinelUs = maxUs + 30L * 86400000000L
-      eIn.addData(Seq((-1L, "__sentinel", sentinelUs, Some(0L))))
-      lIn.addData(Seq((-1L, sentinelUs, Some(0L))))
-      q.processAllAvailable()
-      timer("sentinel_batch")
-      awaitQuiescent(spark, q, name)
-      timer("quiesce")
-    } finally q.stop()
-    val out = spark.table(name)
-      // the sentinel label matches its own sentinel event (same user,
-      // zero distance) — harness plumbing, not contract output
-      .filter(col("user_id") =!= -1L)
-      .select(col("user_id"), unix_micros(col("as_of_ts")).as("as_of_us"),
-        col("label").as("label_fp"), col("event_type"),
-        unix_micros(col("event_ts")).as("event_ts_us"),
-        col("value").as("value_fp"))
-    val schema = out.schema
-    val collected = out.collect()
-    timer("sink_read")
-    logReplayProgress("q188", q, collected.length.toLong)
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(collected.toIndexedSeq, 4), schema)
+    val rows = quantizedEvents(spark, events, None)
+    val labels = rows.filter(_._2 == "purchase").map(r => (r._1, r._3, r._4)) :+
+      ((-1L, sentinelUs(rows), Some(0L)))
+    replay(spark, "q188", statePartitions)(
+      attributedLabels(eventStream(spark, rows),
+        memoryStream(spark, labels).toDF("user_id", "as_of_us", "label")
+          .withColumn("as_of_ts", timestamp_micros(col("as_of_us"))).drop("as_of_us"),
+        lookback, watermark, watermark),
+      sink => sink
+        // the sentinel label matches its own sentinel event (same user,
+        // zero distance) — harness plumbing, not contract output
+        .filter(col("user_id") =!= -1L)
+        .select(col("user_id"), unix_micros(col("as_of_ts")).as("as_of_us"),
+          col("label").as("label_fp"), col("event_type"),
+          unix_micros(col("event_ts")).as("event_ts_us"),
+          col("value").as("value_fp")))
   }
 
   /** The ARBITRARY-STATE oracle contract (q189 — the fourth stateful
     * family after q186 windows, q187 sessions, q188 join state):
     * [[runningUserFeatures]] (flatMapGroupsWithState) driven through
-    * MemoryStream in TWO micro-batches split at the event-time midpoint
+    * [[replay]] in TWO micro-batches split at the event-time midpoint
     * `(min_us + max_us) div 2`, so the emitted rows are each user's
     * snapshot AFTER BATCH 1 (users active in the prefix) and after batch
     * 2 (users active in the suffix, folded ON TOP of their batch-1
@@ -309,195 +261,134 @@ object EventStream {
     * with input rows in the trigger). Every output column is an exact
     * integer: counts and max-of-micros; within-batch fold order is
     * irrelevant (count/max are order-free).
+    *
+    * The two batches are the contract, so this replay runs on the default
+    * trigger: each half is added and then `processAllAvailable`d. That is
+    * the whole barrier here — the plan has no watermark and no timeout, so
+    * the engine never schedules a no-data batch after the data.
     */
   def statefulSnapshotReplay(spark: org.apache.spark.sql.SparkSession,
                              events: DataFrame,
                              statePartitions: Int = 4): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    require(statePartitions >= 1, "statePartitions must be positive")
-    val timer = phaseTimer("q189")
     val rows = events.select(col("user_id").cast("string"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .as[(String, String, Long)].collect()
     require(rows.nonEmpty, "streaming contract needs a non-empty event table")
-    val (minUs, maxUs) = (rows.iterator.map(_._3).min, rows.iterator.map(_._3).max)
-    val cut = Math.floorDiv(minUs + maxUs, 2L)
+    val cut = Math.floorDiv(rows.iterator.map(_._3).min + rows.iterator.map(_._3).max, 2L)
+    val (prefix, suffix) = rows.toSeq.partition(_._3 <= cut)
     val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(String, String, Long)]
-    val stream = input.toDF().toDF("user_id", "event_type", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .withColumn("value", lit(0.0)) // unused by the state fold
-      .drop("us")
-      .as[Event]
-    val name = "graft_stream_q189_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        runningUserFeatures(stream).toDF()
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    timer("start")
-    try {
-      input.addData(rows.filter(_._3 <= cut).toSeq)
-      q.processAllAvailable()
-      timer("batch1")
-      input.addData(rows.filter(_._3 > cut).toSeq)
-      q.processAllAvailable()
-      timer("batch2")
-      awaitQuiescent(spark, q, name)
-      timer("quiesce")
-    } finally q.stop()
-    val out = spark.table(name)
-      .select(col("user_id"), col("event_count"), col("purchase_count"),
-        unix_micros(col("last_event_ts")).as("last_event_us"))
-    val schema = out.schema
-    val collected = out.collect()
-    timer("sink_read")
-    logReplayProgress("q189", q, collected.length.toLong)
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(collected.toIndexedSeq, 4), schema)
+      .MemoryStream[(String, String, Long)](spark)
+    replay(spark, "q189", statePartitions, Trigger.ProcessingTime(0L), q =>
+      Seq(prefix, suffix).foreach { half => input.addData(half); q.processAllAvailable() })(
+      runningUserFeatures(input.toDF().toDF("user_id", "event_type", "us")
+        .withColumn("ts", timestamp_micros(col("us")))
+        .withColumn("value", lit(0.0)) // unused by the state fold
+        .drop("us")
+        .as[Event]).toDF(),
+      sink => sink.select(col("user_id"), col("event_count"), col("purchase_count"),
+        unix_micros(col("last_event_ts")).as("last_event_us")))
   }
 
-  /** Shared MemoryStream replay harness behind the oracle-gated streaming
-    * contracts (q186/q187): feed the quantized event rows (plus, when
-    * `replayMod` is set, every `event_id % replayMod == 0` row again —
-    * the at-least-once redelivery the dedup stage exists for) as ONE
-    * micro-batch, then one far-future sentinel that advances the
-    * event-time watermark past every real window so Append mode flushes
-    * them all; the sentinel's own window/session stays in state and never
-    * emits. The driver-side collect feeding MemoryStream is the harness
-    * contract of the in-memory source (a production job reads
-    * Kafka/files), not a pipeline pattern.
+  /** The one replay harness behind the oracle-gated streaming contracts
+    * (q186-q189): start `plan` on a memory sink in Append mode, let
+    * `drive` run it to its end, stop it, and return the sink through
+    * `project` as a batch frame of local rows.
     *
-    * Determinism hardening (round 18, hunting the one red driver row):
+    * The flush barrier is the engine's own: by default the contract has
+    * added ALL its input — data, replays and the far-future sentinel —
+    * before the query starts, and the query runs with
+    * `Trigger.AvailableNow`, which processes everything available at
+    * start and then runs the no-data micro-batch that ACTS on the
+    * watermark the sentinel set (the batch that flushes the last
+    * Append-mode windows) before it terminates. `awaitTermination`
+    * returns after that batch, or throws the batch's failure as a
+    * `StreamingQueryException`. A replay is therefore a fixed number of
+    * micro-batches (two: data, then flush) whatever the thread timing.
     *
-    *  - **Flush barrier.** `processAllAvailable` waits for DATA; the
-    *    no-data micro-batch the engine schedules to ACT on the watermark
-    *    the sentinel just advanced — the batch that emits the last
-    *    <delay> of real windows — can still be running or unscheduled
-    *    when it returns. Stopping there would race the final flush, so
-    *    the harness polls until the query is idle and the sink row count
-    *    is stable across consecutive looks (bounded; a wedged query
-    *    surfaces as a loud row-count mismatch, never a hang).
-    *  - **Batch logging.** Every micro-batch's (id, input rows, watermark,
-    *    state rows) prints to stderr after the run, so a red driver row
-    *    is attributable to a specific emission pattern instead of
-    *    unreproducible.
-    *  - `statePartitions` pins the stream's shuffle-partition count (a
-    *    state-store instance per partition per stateful operator is the
-    *    harness's fixed cost; the determinism stress spec varies it to
-    *    prove the emitted rows don't depend on it). The session setting
-    *    is restored after plan capture.
+    * `statePartitions` pins the stream's shuffle-partition count (a
+    * state-store instance per partition per stateful operator is the
+    * harness's fixed cost; the determinism stress spec varies it to prove
+    * the emitted rows don't depend on it). The session setting is
+    * restored once the query has started. Every micro-batch's (id, input
+    * rows, watermark, state rows) prints to stderr after the run, so a
+    * failing oracle row carries its emission pattern.
     */
-  private def ingestReplayHarness(spark: org.apache.spark.sql.SparkSession,
-                                  tag: String, events: DataFrame,
-                                  replayMod: Option[Long], statePartitions: Int)(
-      pipeline: DataFrame => DataFrame,
+  private def replay(spark: org.apache.spark.sql.SparkSession, tag: String,
+                     statePartitions: Int,
+                     trigger: Trigger = Trigger.AvailableNow(),
+                     drive: StreamingQuery => Unit = _.awaitTermination())(
+      plan: => DataFrame,
       project: DataFrame => DataFrame): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     require(statePartitions >= 1, "statePartitions must be positive")
-    val timer = phaseTimer(tag)
-    val rows = events.select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"),
-        expr("CAST(floor(value * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)")
-          .as("value_fp"),
-        col("event_id"))
-      .as[(Long, String, Long, Option[Long], Long)].collect()
-    timer("collect")
-    require(rows.nonEmpty, "streaming contract needs a non-empty event table")
-    val replays = replayMod.map(m => rows.filter(_._5 % m == 0L)).getOrElse(Array.empty)
-    val maxUs = rows.iterator.map(_._3).max
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long, Option[Long])]
-    val stream = input.toDF().toDF("user_id", "event_type", "us", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
     val name = s"graft_stream_${tag}_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val q =
       try {
         spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        pipeline(stream)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
+        plan.writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).trigger(trigger).start()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    timer("start")
-    try {
-      input.addData((rows ++ replays).toSeq.map(r => (r._1, r._2, r._3, r._4)))
-      q.processAllAvailable()
-      timer("data_batch")
-      input.addData(Seq((-1L, "__sentinel", maxUs + 30L * 86400000000L, Some(0L))))
-      q.processAllAvailable()
-      timer("sentinel_batch")
-      awaitQuiescent(spark, q, name)
-      timer("quiesce")
-    } finally q.stop()
-    // materialize and DROP the memory-sink view: repeated harness calls
-    // in one session (Bench samples x2-3 + Verify) would otherwise each
-    // leave a driver-held sink table behind
+    try drive(q) finally q.stop()
+    // materialize and DROP the memory-sink view: repeated replays in one
+    // session (Bench samples x2-3 + Verify) would otherwise each leave a
+    // driver-held sink table behind
     val out = project(spark.table(name))
-    val schema = out.schema
     val collected = out.collect()
-    timer("sink_read")
     logReplayProgress(tag, q, collected.length.toLong)
     spark.catalog.dropTempView(name)
     spark.createDataFrame(
-      spark.sparkContext.parallelize(collected.toIndexedSeq, 4), schema)
+      spark.sparkContext.parallelize(collected.toIndexedSeq, 4), out.schema)
   }
 
-  /** Phase-timing breadcrumb for the replay harnesses (diagnostics only,
-    * gated on `SPARK_GRAFT_STREAM_TIMING`): each call prints the seconds
-    * since the previous one to stderr, so the "streaming machinery floor"
-    * decomposes into named phases (driver collect / query start / data
-    * micro-batch / sentinel flush / quiescence barrier / sink read)
-    * instead of staying one opaque number.
+  /** The event log as the q186-q188 replays stream it, collected to the
+    * driver: (user_id, event_type, ts in micros, value in 1e6 fixed
+    * point). `value` quantizes BEFORE the stream (floor(v·1e6 + 0.5),
+    * single IEEE ops — the q65 rule), so sums downstream are exact BIGINT
+    * arithmetic; a NULL value stays NULL. With `replayMod`, every
+    * `event_id % replayMod == 0` row follows once more — the at-least-once
+    * redelivery. The driver-side collect feeding MemoryStream is the
+    * harness contract of the in-memory source (a production job reads
+    * Kafka/files), not a pipeline pattern.
     */
-  private def phaseTimer(tag: String): String => Unit =
-    if (!sys.env.contains("SPARK_GRAFT_STREAM_TIMING")) _ => ()
-    else {
-      var last = System.nanoTime()
-      phase => {
-        val now = System.nanoTime()
-        System.err.println(f"[replay-timing] $tag $phase ${(now - last) / 1e9}%.3f s")
-        last = now
-      }
-    }
+  private def quantizedEvents(spark: org.apache.spark.sql.SparkSession,
+                              events: DataFrame, replayMod: Option[Long])
+      : Seq[(Long, String, Long, Option[Long])] = {
+    import spark.implicits._
+    val rows = events.select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"),
+        expr("CAST(floor(value * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)")
+          .as("value_fp"),
+        col("event_id"))
+      .as[(Long, String, Long, Option[Long], Long)].collect()
+    require(rows.nonEmpty, "streaming contract needs a non-empty event table")
+    val replays = replayMod.map(m => rows.filter(_._5 % m == 0L)).getOrElse(Array.empty)
+    (rows ++ replays).toSeq.map(r => (r._1, r._2, r._3, r._4))
+  }
 
-  /** Block until the streaming query has no pending work AND the memory
-    * sink's row count is stable across consecutive looks — the flush
-    * barrier [[ingestReplayHarness]] documents. Bounded at 60s: on
-    * timeout the caller proceeds and any missing flush surfaces as a
-    * loud row-count mismatch downstream.
-    */
-  private def awaitQuiescent(spark: org.apache.spark.sql.SparkSession,
-                             q: org.apache.spark.sql.streaming.StreamingQuery,
-                             view: String): Unit = {
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    var stable = 0
-    var last = -1L
-    while (stable < 3 && System.nanoTime() < deadline) {
-      q.processAllAvailable()
-      val idle = !q.status.isTriggerActive && !q.status.isDataAvailable
-      val n = spark.table(view).count()
-      if (idle && n == last) stable += 1
-      else { stable = 0; last = n }
-      // sleep between EVERY poll (stable ones included) so the three
-      // confirmations span a real time window — a watermark-acting
-      // no-data micro-batch that is scheduled but not yet running could
-      // otherwise slip past three back-to-back sub-ms looks
-      if (stable < 3) Thread.sleep(50)
-    }
-    if (stable < 3)
-      System.err.println(
-        s"[quiescence] WARNING: 60s deadline expired before 3 stable " +
-          s"confirmations (view=$view, lastRows=$last) — proceeding; any " +
-          "missed flush surfaces as a row-count mismatch downstream")
+  /** Event time of the far-future sentinel: 30 days past the last event,
+    * so the watermark it sets passes every real window and session. */
+  private def sentinelUs(rows: Seq[(Long, String, Long, Option[Long])]): Long =
+    rows.iterator.map(_._3).max + 30L * 86400000000L
+
+  /** A MemoryStream already holding `rows` — the input of an AvailableNow
+    * replay. */
+  private def memoryStream[A: Encoder](spark: org.apache.spark.sql.SparkSession,
+                                       rows: Seq[A]): DataFrame = {
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A](spark)
+    in.addData(rows)
+    in.toDF()
+  }
+
+  /** The event stream of the q186-q188 replays: `rows` and then one
+    * sentinel event of user -1 at [[sentinelUs]]. */
+  private def eventStream(spark: org.apache.spark.sql.SparkSession,
+                          rows: Seq[(Long, String, Long, Option[Long])]): DataFrame = {
+    import spark.implicits._
+    memoryStream(spark, rows :+ ((-1L, "__sentinel", sentinelUs(rows), Some(0L))))
+      .toDF("user_id", "event_type", "us", "value")
+      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
   }
 
   /** Per-micro-batch breadcrumbs for the replay contracts — printed AFTER
@@ -505,7 +396,7 @@ object EventStream {
     * boundaries, watermark advance, state rows) in the captured log.
     */
   private def logReplayProgress(tag: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery, sinkRows: Long): Unit =
+      q: StreamingQuery, sinkRows: Long): Unit =
     try {
       q.recentProgress.foreach { p =>
         val wm = Option(p.eventTime).flatMap(e => Option(e.get("watermark"))).getOrElse("-")

@@ -1,23 +1,34 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.SparkTestBase
 
-/** Determinism stress for the oracle-gated streaming contracts (q186/q187).
+/** Determinism of the oracle-gated streaming contracts (q186-q189).
   *
-  * Round 17's driver read ONE red hash on q186 that no re-run reproduced
-  * (rows and schema matched; three judge reruns and both builder closing
-  * gates were green). This spec hunts that class of failure the only way a
-  * rare nondeterminism can be hunted: run the EXACT contract harness many
-  * times in one session while varying everything the harness is supposed
-  * to be invariant to — state-store partition count, the session's
-  * shuffle-partition setting, and prior-query session state — and assert
-  * the emitted rows are bit-identical every time AND equal to the batch
-  * formulation (the q186a probe's in-test twin).
+  * Every contract runs through one replay harness whose flush barrier is
+  * the engine's: q186-q188 add all their input (data, replays, the
+  * far-future sentinel) before the query starts and run it with
+  * `Trigger.AvailableNow`, which terminates only after the no-data batch
+  * that acts on the sentinel's watermark; q189 drives its two contractual
+  * batches with `processAllAvailable`, and its plan schedules no no-data
+  * batch. The stress tests run each contract many times in one session
+  * while varying everything the harness is supposed to be invariant to —
+  * state-store partition count, the session's shuffle-partition setting,
+  * and prior-query session state — and assert the emitted rows are
+  * bit-identical every time AND equal to the batch formulation. A
+  * listener test pins the barrier itself: a replay commits a fixed number
+  * of micro-batches and runs the same Spark jobs on every call.
   */
 class StreamingDeterminismSpec extends SparkTestBase {
   import spark.implicits._
@@ -67,6 +78,67 @@ class StreamingDeterminismSpec extends SparkTestBase {
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq
+
+  /** What one replay call runs: the number of distinct micro-batch ids
+    * each replay query it starts reports, and the Spark jobs it starts —
+    * from this thread (input and sink collects) and from its queries'
+    * stream threads.
+    */
+  private def observe(body: => DataFrame): (Seq[Int], Int) = {
+    val group = s"replay-${System.nanoTime()}"
+    val started = ConcurrentHashMap.newKeySet[String]()
+    val batchIds = new ConcurrentHashMap[String, java.util.Set[Long]]()
+    val jobs = new AtomicInteger(0)
+    // QueryStartedEvent reaches the session's listeners synchronously on
+    // the stream thread, before the query runs any job
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith("graft_stream_"))) started.add(e.id.toString)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (started.contains(e.progress.id.toString))
+          batchIds.computeIfAbsent(e.progress.id.toString,
+            _ => ConcurrentHashMap.newKeySet[Long]()).add(e.progress.batchId)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("spark.jobGroup.id") == group ||
+              Option(p.getProperty(StreamExecution.QUERY_ID_KEY)).exists(started.contains))
+            jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    spark.streams.addListener(queries)
+    sc.addSparkListener(probe)
+    try {
+      sc.setJobGroup(group, "replay")
+      body
+      GraftColumnBridge.waitForListeners(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(probe)
+      spark.streams.removeListener(queries)
+    }
+    (batchIds.values.asScala.map(_.size).toSeq, jobs.get)
+  }
+
+  test("a replay commits two micro-batches and runs the same jobs on every call") {
+    val replays = Seq[(String, () => DataFrame)](
+      "q186" -> (() => EventStream.windowedIngestReplay(spark, events, replayMod = 5L)),
+      "q187" -> (() => EventStream.sessionIngestReplay(spark, events)),
+      "q188" -> (() => EventStream.intervalJoinReplay(spark, events)),
+      "q189" -> (() => EventStream.statefulSnapshotReplay(spark, events)))
+    replays.foreach { case (tag, run) =>
+      val (firstBatches, firstJobs) = observe(run())
+      val (secondBatches, secondJobs) = observe(run())
+      withClue(s"$tag: ") {
+        firstBatches shouldBe Seq(2)
+        secondBatches shouldBe Seq(2)
+        secondJobs shouldBe firstJobs
+      }
+    }
+  }
 
   test("windowed ingest replay is bit-identical across 20 runs, partition counts, and session noise") {
     val expected = canon(batchWindows(events)
